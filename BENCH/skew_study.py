@@ -74,12 +74,9 @@ def main() -> None:
     # biggest single join key's candidate-pair count (the work the largest
     # reduce task would carry), per salt setting
     def max_key_pairs(salt_buckets: int) -> int:
-        left = feats.withColumn(
-            "bk", F.explode(_block_keys(F.col("family"), F.col("death_iso"), F.col("birth_iso")))
-        )
-        right = actors.withColumn(
-            "bk", F.explode(_block_keys(F.col("family"), F.col("death_iso"), F.col("birth_iso")))
-        )
+        keys = _block_keys("family", "death_iso", "birth_iso")
+        left = feats.selectExpr("*", f"explode({keys}) AS bk")
+        right = actors.selectExpr("*", f"explode({keys}) AS bk")
         keys = ["bk"]
         if salt_buckets > 1:
             left = left.withColumn("salt", F.pmod(F.hash("record_uri"), F.lit(salt_buckets)))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import namespaces as NS
+from .sqltext import lit as sql_lit
 
 # --------------------------------------------------------------------------
 # Literal dimension data (deterministic; the single source of truth for both
@@ -181,179 +182,194 @@ GRAVEYARD_MAPPING = [
 
 
 # --------------------------------------------------------------------------
-# Spark DataFrame builders (tiny → always broadcast on the join side).
-# Memoized per session: the rows are module constants, and rebuilding the
-# local relation per call costs a py4j round trip + re-analysis in every
-# embedding query — pure driver overhead at any scale. DataFrames are
-# immutable, so sharing one plan object is safe.
+# Row builders — one per dimension, shared by the Spark tables and the DuckDB
+# VALUES CTEs below, so both sides of the oracle contract read the same rows.
 # --------------------------------------------------------------------------
 
-# Entries pin the session object: id() of a garbage-collected session could
-# be reused by a new one, which would silently serve another session's plan.
-_DIM_MEMO: dict[tuple[str, int], tuple[SparkSession, DataFrame]] = {}
+def rank_rows() -> list[tuple]:
+    """(rank_uri, label_fi, label_en, level, alt_labels)."""
+    return [(NS.RANKS_NS + slug, fi, en, lvl, alts) for slug, fi, en, lvl, alts in RANKS]
 
 
-def _memo_dim(fn):
-    def wrapper(spark: SparkSession) -> DataFrame:
-        key = (fn.__name__, id(spark))
-        if key not in _DIM_MEMO:
-            _DIM_MEMO[key] = (spark, fn(spark))
-        return _DIM_MEMO[key][1]
-
-    wrapper.__name__ = fn.__name__
-    wrapper.__doc__ = fn.__doc__
-    return wrapper
-
-
-@_memo_dim
-def dim_ranks(spark: SparkSession) -> DataFrame:
-    """rank_uri, label_fi, label_en, level, alt_labels."""
-    rows = [
-        (NS.RANKS_NS + slug, fi, en, lvl, alts)
-        for slug, fi, en, lvl, alts in RANKS
-    ]
-    return spark.createDataFrame(
-        rows, "rank_uri string, label_fi string, label_en string, level int, alt_labels array<string>"
-    )
-
-
-@_memo_dim
-def dim_rank_labels(spark: SparkSession) -> DataFrame:
-    """Exploded (rank_uri, label, lang, is_pref) — the join target of rank
-    linking (prefLabel|altLabel, like the SPARQL alternation in the
-    reference's covernumber query, src/linker.py:137)."""
+def rank_label_rows() -> list[tuple]:
+    """(rank_uri, label, lang, is_pref, level) — prefLabel|altLabel exploded."""
     rows = []
-    for slug, fi, en, _lvl, alts in RANKS:
+    for slug, fi, en, lvl, alts in RANKS:
         uri = NS.RANKS_NS + slug
-        rows.append((uri, fi, "fi", True))
-        rows.append((uri, en, "en", True))
-        rows.extend((uri, a, "fi", False) for a in alts)
-    return spark.createDataFrame(rows, "rank_uri string, label string, lang string, is_pref boolean")
+        rows.append((uri, fi, "fi", True, lvl))
+        rows.append((uri, en, "en", True, lvl))
+        rows.extend((uri, a, "fi", False, lvl) for a in alts)
+    return rows
 
 
-@_memo_dim
-def dim_units(spark: SparkSession) -> DataFrame:
-    rows = [
+def unit_rows() -> list[tuple]:
+    """(unit_uri, pref_label, alt_labels, cover_number, conflict)."""
+    return [
         (NS.UNITS_NS + slug, pref, alts, cover, NS.CONFLICTS_NS + conflict)
         for slug, pref, alts, cover, conflict in UNITS
     ]
-    return spark.createDataFrame(
-        rows,
-        "unit_uri string, pref_label string, alt_labels array<string>, cover_number string, conflict string",
-    )
 
 
-@_memo_dim
-def dim_unit_labels(spark: SparkSession) -> DataFrame:
-    """Exploded (unit_uri, label, cover_number, conflict)."""
-    rows = []
-    for slug, pref, alts, cover, conflict in UNITS:
-        uri = NS.UNITS_NS + slug
-        for lbl in [pref, *alts]:
-            rows.append((uri, lbl, cover, NS.CONFLICTS_NS + conflict))
-    return spark.createDataFrame(
-        rows, "unit_uri string, label string, cover_number string, conflict string"
-    )
+def unit_label_rows() -> list[tuple]:
+    """(unit_uri, label, cover_number, conflict) — one row per label."""
+    return [
+        (uri, lbl, cover, conflict)
+        for uri, pref, alts, cover, conflict in unit_rows()
+        for lbl in [pref, *alts]
+    ]
 
 
-@_memo_dim
-def dim_municipalities(spark: SparkSession) -> DataFrame:
-    """mun_uri, label, current_municipality (PNR), wartime_municipality
-    (WarSampo), preferred_municipality = coalesce(wartime, current, self)
-    (reference src/linker.py:108-112)."""
+def municipality_rows() -> list[tuple]:
+    """(mun_uri, label, current_municipality, wartime_municipality,
+    preferred_municipality = coalesce(wartime, current, self))."""
     rows = []
     for code, label, pnr, warsa_id in MUNICIPALITIES:
         uri = NS.MUNICIPALITIES + "k" + code
         cur = NS.PNR_NS + "P_" + pnr if pnr else None
         war = NS.WARSA_MUNICIPALITIES_NS + "m_place_" + warsa_id if warsa_id else None
         rows.append((uri, label, cur, war, war or cur or uri))
-    return spark.createDataFrame(
-        rows,
-        "mun_uri string, label string, current_municipality string, "
-        "wartime_municipality string, preferred_municipality string",
-    )
+    return rows
 
 
-@_memo_dim
-def dim_pnr_labels(spark: SparkSession) -> DataFrame:
-    """Finnish Place Name Registry label dictionary (the PNR ARPA service of
-    the reference, arpa_services/pnr_municipality — exact lowercase label
-    equality is the match rule)."""
-    rows = [
-        (NS.PNR_NS + "P_" + pnr, label)
-        for _, label, pnr, _ in MUNICIPALITIES
-        if pnr
-    ]
-    return spark.createDataFrame(rows, "pnr_uri string, label string")
+def pnr_label_rows() -> list[tuple]:
+    return [(NS.PNR_NS + "P_" + pnr, label) for _, label, pnr, _ in MUNICIPALITIES if pnr]
 
 
-@_memo_dim
-def dim_warsa_labels(spark: SparkSession) -> DataFrame:
-    """WarSampo wartime municipality label dictionary
-    (http://ldf.fi/warsa/places/municipalities graph, src/linker.py:90-91)."""
-    rows = [
+def warsa_label_rows() -> list[tuple]:
+    return [
         (NS.WARSA_MUNICIPALITIES_NS + "m_place_" + wid, label)
         for _, label, _, wid in MUNICIPALITIES
         if wid
     ]
-    return spark.createDataFrame(rows, "warsa_uri string, label string")
 
 
-@_memo_dim
+def occupation_rows() -> list[tuple]:
+    return [(NS.OCCUPATIONS_NS + slug, label) for slug, label in OCCUPATIONS]
+
+
+def cemetery_rows() -> list[tuple]:
+    # deduplicated here, not with a DataFrame .distinct(): the rows are
+    # constants, and a distinct puts an Exchange + an AQE query stage into
+    # every query that embeds this dimension
+    return list(dict.fromkeys(
+        (NS.CEMETERIES + (f"h{code}_{n}" if code != "x" else "hx_0"),)
+        for code, n in CEMETERIES
+    ))
+
+
+def code_rows() -> list[tuple]:
+    """(code_kind, key (nullable), uri) — all enum tables stacked."""
+    return [
+        (kind, key, ns + local)
+        for kind, (ns, table) in CODE_TABLES.items()
+        for key, local in table.items()
+    ]
+
+
+# --------------------------------------------------------------------------
+# Spark DataFrame builders (tiny → always broadcast on the join side).
+# Each is one ``spark.sql`` over an inline VALUES table: the plan is a
+# JVM-local LocalTableScan, so no Python worker ever scans a dimension, and
+# building one costs a few py4j round trips — nothing worth memoizing.
+# --------------------------------------------------------------------------
+
+def _values_df(spark: SparkSession, ddl: str, rows: list[tuple]) -> DataFrame:
+    """``rows`` as a DataFrame of schema ``ddl`` (every column nullable, as
+    the DDL declares: an inline table marks a column NOT NULL when no row
+    holds a null, and nullif(x, NULL) is the identity that undoes that).
+    ``ddl`` is "name type, ..." with no comma inside a type."""
+    cols = [c.strip().split(" ", 1) for c in ddl.split(",")]
+    proj = ", ".join(f"nullif(CAST(c{i} AS {t}), NULL) AS {n}" for i, (n, t) in enumerate(cols))
+    body = ", ".join("(" + ", ".join(sql_lit(v) for v in row) + ")" for row in rows)
+    names = ", ".join(f"c{i}" for i in range(len(cols)))
+    return spark.sql(f"SELECT {proj} FROM VALUES {body} AS _t({names})")
+
+
+def dim_ranks(spark: SparkSession) -> DataFrame:
+    """rank_uri, label_fi, label_en, level, alt_labels."""
+    return _values_df(
+        spark,
+        "rank_uri string, label_fi string, label_en string, level int, alt_labels array<string>",
+        rank_rows(),
+    )
+
+
+def dim_rank_labels(spark: SparkSession) -> DataFrame:
+    """Exploded (rank_uri, label, lang, is_pref) — the join target of rank
+    linking (prefLabel|altLabel, like the SPARQL alternation in the
+    reference's covernumber query, src/linker.py:137)."""
+    return _values_df(
+        spark,
+        "rank_uri string, label string, lang string, is_pref boolean",
+        [r[:4] for r in rank_label_rows()],
+    )
+
+
+def dim_units(spark: SparkSession) -> DataFrame:
+    return _values_df(
+        spark,
+        "unit_uri string, pref_label string, alt_labels array<string>, cover_number string, conflict string",
+        unit_rows(),
+    )
+
+
+def dim_unit_labels(spark: SparkSession) -> DataFrame:
+    """Exploded (unit_uri, label, cover_number, conflict)."""
+    return _values_df(
+        spark, "unit_uri string, label string, cover_number string, conflict string", unit_label_rows()
+    )
+
+
+def dim_municipalities(spark: SparkSession) -> DataFrame:
+    """mun_uri, label, current_municipality (PNR), wartime_municipality
+    (WarSampo), preferred_municipality = coalesce(wartime, current, self)
+    (reference src/linker.py:108-112)."""
+    return _values_df(
+        spark,
+        "mun_uri string, label string, current_municipality string, "
+        "wartime_municipality string, preferred_municipality string",
+        municipality_rows(),
+    )
+
+
+def dim_pnr_labels(spark: SparkSession) -> DataFrame:
+    """Finnish Place Name Registry label dictionary (the PNR ARPA service of
+    the reference, arpa_services/pnr_municipality — exact lowercase label
+    equality is the match rule)."""
+    return _values_df(spark, "pnr_uri string, label string", pnr_label_rows())
+
+
+def dim_warsa_labels(spark: SparkSession) -> DataFrame:
+    """WarSampo wartime municipality label dictionary
+    (http://ldf.fi/warsa/places/municipalities graph, src/linker.py:90-91)."""
+    return _values_df(spark, "warsa_uri string, label string", warsa_label_rows())
+
+
 def dim_occupations(spark: SparkSession) -> DataFrame:
-    rows = [(NS.OCCUPATIONS_NS + slug, label) for slug, label in OCCUPATIONS]
-    return spark.createDataFrame(rows, "occ_uri string, label string")
+    return _values_df(spark, "occ_uri string, label string", occupation_rows())
 
 
-@_memo_dim
 def dim_cemeteries(spark: SparkSession) -> DataFrame:
-    rows = [(NS.CEMETERIES + f"h{code}_{n}",) if code != "x" else (NS.CEMETERIES + "hx_0",)
-            for code, n in CEMETERIES]
-    # dedup in Python, not .distinct(): the rows are literal constants, and a
-    # DataFrame distinct puts an Exchange + an AQE query stage into every
-    # query that embeds this dimension (~10 contract queries + the flagship).
-    uniq = list(dict.fromkeys(rows))
-    return spark.createDataFrame(uniq, "cem_uri string")
+    return _values_df(spark, "cem_uri string", cemetery_rows())
 
 
-@_memo_dim
 def dim_codes(spark: SparkSession) -> DataFrame:
     """code_kind, key (nullable), uri — all enum tables stacked."""
-    rows = []
-    for kind, (ns, table) in CODE_TABLES.items():
-        for key, local in table.items():
-            rows.append((kind, key, ns + local))
-    return spark.createDataFrame(rows, "code_kind string, key string, uri string")
-
-
-_DIMS_CACHE: dict[int, dict] = {}
+    return _values_df(spark, "code_kind string, key string, uri string", code_rows())
 
 
 def broadcast_dims(spark: SparkSession) -> dict[str, DataFrame]:
-    """All dimensions, wrapped in F.broadcast for joins.
-
-    Memoized per session: the dimension rows are module constants, and each
-    ``createDataFrame`` costs a py4j local-relation round trip plus fresh
-    analysis in every query that embeds it. One shared plan per session also
-    lets AQE/ReuseExchange share the built broadcast across queries instead
-    of re-broadcasting an identical relation per call (driver-side cost that
-    is pure overhead at any scale)."""
-    key = id(spark)
-    if key not in _DIMS_CACHE:
-        # "_session" pins the session so its id cannot be recycled (same
-        # rationale as _DIM_MEMO); callers only read the dim entries.
-        _DIMS_CACHE[key] = {
-            "_session": spark,
-            "ranks": F.broadcast(dim_ranks(spark)),
-            "rank_labels": F.broadcast(dim_rank_labels(spark)),
-            "units": F.broadcast(dim_units(spark)),
-            "unit_labels": F.broadcast(dim_unit_labels(spark)),
-            "municipalities": F.broadcast(dim_municipalities(spark)),
-            "occupations": F.broadcast(dim_occupations(spark)),
-            "cemeteries": F.broadcast(dim_cemeteries(spark)),
-            "codes": F.broadcast(dim_codes(spark)),
-        }
-    return _DIMS_CACHE[key]
+    """The linking dimensions, each wrapped in F.broadcast for joins."""
+    return {
+        "ranks": F.broadcast(dim_ranks(spark)),
+        "rank_labels": F.broadcast(dim_rank_labels(spark)),
+        "units": F.broadcast(dim_units(spark)),
+        "unit_labels": F.broadcast(dim_unit_labels(spark)),
+        "municipalities": F.broadcast(dim_municipalities(spark)),
+        "occupations": F.broadcast(dim_occupations(spark)),
+        "cemeteries": F.broadcast(dim_cemeteries(spark)),
+        "codes": F.broadcast(dim_codes(spark)),
+    }
 
 
 # --------------------------------------------------------------------------
@@ -377,71 +393,39 @@ def values_cte(name: str, cols: list[str], rows: list[tuple]) -> str:
 
 
 def rank_labels_cte() -> str:
-    rows = []
-    for slug, fi, en, lvl, alts in RANKS:
-        uri = NS.RANKS_NS + slug
-        rows.append((uri, fi, "fi", True, lvl))
-        rows.append((uri, en, "en", True, lvl))
-        rows.extend((uri, a, "fi", False, lvl) for a in alts)
-    return values_cte("rank_labels", ["rank_uri", "label", "lang", "is_pref", "level"], rows)
+    return values_cte("rank_labels", ["rank_uri", "label", "lang", "is_pref", "level"], rank_label_rows())
 
 
 def unit_labels_cte() -> str:
-    rows = []
-    for slug, pref, alts, cover, conflict in UNITS:
-        uri = NS.UNITS_NS + slug
-        for lbl in [pref, *alts]:
-            rows.append((uri, lbl, cover, NS.CONFLICTS_NS + conflict))
-    return values_cte("unit_labels", ["unit_uri", "label", "cover_number", "conflict"], rows)
+    return values_cte("unit_labels", ["unit_uri", "label", "cover_number", "conflict"], unit_label_rows())
 
 
 def municipalities_cte() -> str:
-    rows = []
-    for code, label, pnr, warsa_id in MUNICIPALITIES:
-        uri = NS.MUNICIPALITIES + "k" + code
-        cur = NS.PNR_NS + "P_" + pnr if pnr else None
-        war = NS.WARSA_MUNICIPALITIES_NS + "m_place_" + warsa_id if warsa_id else None
-        rows.append((uri, label, cur, war, war or cur or uri))
     return values_cte(
         "municipalities",
         ["mun_uri", "label", "current_municipality", "wartime_municipality", "preferred_municipality"],
-        rows,
+        municipality_rows(),
     )
 
 
 def pnr_labels_cte() -> str:
-    rows = [(NS.PNR_NS + "P_" + pnr, label) for _, label, pnr, _ in MUNICIPALITIES if pnr]
-    return values_cte("pnr_labels", ["pnr_uri", "label"], rows)
+    return values_cte("pnr_labels", ["pnr_uri", "label"], pnr_label_rows())
 
 
 def warsa_labels_cte() -> str:
-    rows = [
-        (NS.WARSA_MUNICIPALITIES_NS + "m_place_" + wid, label)
-        for _, label, _, wid in MUNICIPALITIES
-        if wid
-    ]
-    return values_cte("warsa_labels", ["warsa_uri", "label"], rows)
+    return values_cte("warsa_labels", ["warsa_uri", "label"], warsa_label_rows())
 
 
 def occupations_cte() -> str:
-    rows = [(NS.OCCUPATIONS_NS + slug, label) for slug, label in OCCUPATIONS]
-    return values_cte("occupations", ["occ_uri", "label"], rows)
+    return values_cte("occupations", ["occ_uri", "label"], occupation_rows())
 
 
 def cemeteries_cte() -> str:
-    rows = sorted({
-        (NS.CEMETERIES + (f"h{code}_{n}" if code != "x" else "hx_0"),)
-        for code, n in CEMETERIES
-    })
-    return values_cte("cemeteries", ["cem_uri"], rows)
+    return values_cte("cemeteries", ["cem_uri"], sorted(cemetery_rows()))
 
 
 def codes_cte() -> str:
-    rows = []
-    for kind, (ns, table) in CODE_TABLES.items():
-        for key, local in table.items():
-            rows.append((kind, key, ns + local))
-    return values_cte("codes", ["code_kind", "key", "uri"], rows)
+    return values_cte("codes", ["code_kind", "key", "uri"], code_rows())
 
 
 # --------------------------------------------------------------------------
@@ -457,11 +441,7 @@ def municipalities_ttl() -> str:
     the generator of tests/fixtures/linked_municipalities.ttl, so the TTL
     reader's output is testable against dim_municipalities row-for-row."""
     blocks = []
-    for code, label, pnr, warsa_id in MUNICIPALITIES:
-        uri = NS.MUNICIPALITIES + "k" + code
-        cur = NS.PNR_NS + "P_" + pnr if pnr else None
-        war = NS.WARSA_MUNICIPALITIES_NS + "m_place_" + warsa_id if warsa_id else None
-        pref = war or cur or uri
+    for uri, label, cur, war, pref in municipality_rows():
         lines = [
             f"<{uri}>",
             f"        a       <{NS.cas('Municipality')}> ;",

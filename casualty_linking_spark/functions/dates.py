@@ -1,5 +1,7 @@
 """Date conversion & validation (reference semantics: src/converters.py:22-58,
-src/validators.py:14-39) as pure JVM-side Column expressions — no UDFs.
+src/validators.py:14-39) as pure JVM-side expressions — no UDFs. The
+pipeline's builders render Spark SQL text (see sqltext.py); the duckdb_*
+functions render the same logic for the oracle.
 
 The reference's date cell is a union type date|dirty-string|null
 (SURVEY.md §1.2); Spark has no unions, so a converted date becomes the column
@@ -15,6 +17,8 @@ import datetime
 
 from pyspark.sql import Column, functions as F
 
+from ..sqltext import lit
+
 # Hard-coded typo repairs, verbatim from reference src/converters.py:38-42.
 TYPO_FIXES = [
     ("26.02.0194", "26.02.1944"),
@@ -25,69 +29,81 @@ TYPO_FIXES = [
 ]
 
 
-def clean_date_str(raw: Column) -> Column:
+def clean_date_str(raw: str) -> str:
     """strip, O->0, ','->'.', then the five typo fixes (src/converters.py:37-42)."""
-    c = F.replace(F.replace(F.trim(raw), F.lit("O"), F.lit("0")), F.lit(","), F.lit("."))
+    c = f"replace(replace(trim({raw}), 'O', '0'), ',', '.')"
     for bad, good in TYPO_FIXES:
-        c = F.replace(c, F.lit(bad), F.lit(good))
+        c = f"replace({c}, {lit(bad)}, {lit(good)})"
     return c
 
 
-def is_unknown_date(raw: Column) -> Column:
+def is_unknown_date(raw: str) -> str:
     """All characters are 'x' (ignoring dots): an explicit unknown marker
     (src/converters.py:32)."""
-    stripped = F.lower(F.replace(raw, F.lit("."), F.lit("")))
-    return raw.isNotNull() & (F.length(stripped) > 0) & stripped.rlike("^x+$")
+    stripped = f"lower(replace({raw}, '.', ''))"
+    return f"(isnotnull({raw}) AND length({stripped}) > 0 AND {stripped} RLIKE '^x+$')"
 
 
-def convert_dates(raw: Column) -> tuple[Column, Column]:
-    """Return (date_col, str_col) per the union-type encoding above."""
+def date_parts(raw: str) -> list[str]:
+    """The cleaned string and its parse as ``<raw>_clean`` / ``<raw>_parsed``
+    — the intermediate columns convert_dates reads, to be projected before
+    it. Binding them once keeps the converter text short: the SQL parser
+    caches state for every distinct expression it reads, so repeating the
+    cleaning chain in every branch would grow that cache several-fold."""
     cleaned = clean_date_str(raw)
-    parsed = F.try_to_timestamp(cleaned, F.lit("d.M.yyyy")).cast("date")
-    year = F.year(parsed)
+    return [
+        f"{cleaned} AS {raw}_clean",
+        f"CAST(try_to_timestamp({cleaned}, 'd.M.yyyy') AS DATE) AS {raw}_parsed",
+    ]
+
+
+def convert_dates(raw: str) -> tuple[str, str]:
+    """(date_expr, str_expr) SQL text over the raw column ``raw`` and its
+    date_parts columns, per the union-type encoding above."""
+    cleaned, parsed = f"{raw}_clean", f"{raw}_parsed"
+    year = f"year({parsed})"
     # Century repair: years rendered 09xx/10xx are 19xx (src/converters.py:47-48).
-    repaired = F.when(
-        year.between(900, 1099),
-        F.make_date(year % 100 + 1900, F.month(parsed), F.dayofmonth(parsed)),
-    ).otherwise(parsed)
-
-    empty = raw.isNull() | (F.length(F.trim(raw)) == 0)
-    unknown = is_unknown_date(raw)
-
-    date_col = F.when(empty | unknown, F.lit(None).cast("date")).otherwise(repaired)
-    str_col = (
-        F.when(empty | unknown, F.lit(None).cast("string"))
-        .when(repaired.isNotNull(), F.lit(None).cast("string"))
-        .otherwise(cleaned)
+    repaired = (
+        f"CASE WHEN {year} >= 900 AND {year} <= 1099 "
+        f"THEN make_date({year} % 100 + 1900, month({parsed}), dayofmonth({parsed})) "
+        f"ELSE {parsed} END"
     )
-    return date_col, str_col
+    missing = f"(isnull({raw}) OR length(trim({raw})) = 0) OR {is_unknown_date(raw)}"
+    date_expr = f"CASE WHEN {missing} THEN CAST(NULL AS DATE) ELSE {repaired} END"
+    str_expr = (
+        f"CASE WHEN {missing} THEN CAST(NULL AS STRING) "
+        f"WHEN isnotnull({repaired}) THEN CAST(NULL AS STRING) ELSE {cleaned} END"
+    )
+    return date_expr, str_expr
 
 
 def validate_dates(
-    date_col: Column,
-    str_col: Column,
+    date_expr: str,
+    str_expr: str,
     after: datetime.date = datetime.date(1939, 11, 28),
     before: datetime.date = datetime.date(1945, 4, 25),
-) -> Column:
+) -> str:
     """Finnish error strings, verbatim semantics of src/validators.py:14-39:
     unparseable non-'xx' strings are invalid; parsed dates must fall in
     [after, before]. The 'xx'-prefixed unresolved strings pass silently."""
+    # NB: the 'xx' prefix check is case-sensitive in the reference
+    # (src/validators.py:28 compares resolved[:2] != 'xx' directly).
     return (
-        # NB: the 'xx' prefix check is case-sensitive in the reference
-        # (src/validators.py:28 compares resolved[:2] != 'xx' directly).
-        F.when(str_col.isNotNull() & (F.substring(str_col, 1, 2) != F.lit("xx")),
-               F.lit("Päivämäärä ei ole kelvollinen"))
-        .when(date_col.isNotNull() & (date_col < F.lit(after)), F.lit("Päivämäärä liian varhainen"))
-        .when(date_col.isNotNull() & (date_col > F.lit(before)), F.lit("Päivämäärä liian myöhäinen"))
-        .otherwise(F.lit(None).cast("string"))
+        f"CASE WHEN isnotnull({str_expr}) AND substring({str_expr}, 1, 2) != 'xx' "
+        "THEN 'Päivämäärä ei ole kelvollinen' "
+        f"WHEN isnotnull({date_expr}) AND ({date_expr}) < {lit(after)} "
+        "THEN 'Päivämäärä liian varhainen' "
+        f"WHEN isnotnull({date_expr}) AND ({date_expr}) > {lit(before)} "
+        "THEN 'Päivämäärä liian myöhäinen' "
+        "ELSE CAST(NULL AS STRING) END"
     )
 
 
-def date_cmp_str(date_col: Column, str_col: Column) -> Column:
+def date_cmp_str(date_expr: str, str_expr: str) -> str:
     """The string the reference would see for ``str(literal)`` — ISO date when
     parsed, else the cleaned string (drives the Winter-War string compare,
     src/linker.py:189-190)."""
-    return F.coalesce(F.date_format(date_col, "yyyy-MM-dd"), str_col)
+    return f"coalesce(date_format({date_expr}, 'yyyy-MM-dd'), {str_expr})"
 
 
 def strip_dash(raw: Column) -> Column:

@@ -15,6 +15,8 @@ import re
 import pandas as pd
 from pyspark.sql import functions as F, types as T
 
+from ..sqltext import lit
+
 
 def unify_family_py(family: str) -> str:
     """Scalar mirror of unify_family_name (src/process.py:82-89); used by the
@@ -95,8 +97,12 @@ def convert_person_name(s: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(parts, columns=["given", "family", "full"])
 
 
-def strip_prev_name(family_col):
+def strip_prev_name(family: str) -> str:
     """'Heino (ent. Vanha)' -> 'Heino Vanha'? No — the reference keeps only the
     captured previous name in place: re.sub(r'\\(ent\\.\\s*(.+)\\)', r'\\1', family)
-    (src/linker.py:70). JVM-side regexp_replace."""
-    return F.regexp_replace(family_col, r"\(ent\.\s*(.+)\)", "$1")
+    (src/linker.py:70). JVM-side regexp_replace, as Spark SQL text over the
+    column expression ``family``."""
+    return f"regexp_replace({family}, {_PREV_NAME}, '$1')"
+
+
+_PREV_NAME = lit(r"\(ent\.\s*(.+)\)")

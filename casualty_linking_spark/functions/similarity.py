@@ -2,8 +2,10 @@
 
 Two tiers (SURVEY.md §2.3):
 
-* JVM-side ``levenshtein_ratio`` — Spark's built-in ``F.levenshtein`` in a
-  normalized 0-100 ratio. This is the engine's default unit scorer (and the
+* JVM-side ``levenshtein_ratio`` — Spark's built-in ``levenshtein`` in a
+  normalized 0-100 ratio, rendered as Spark SQL text like ``ascii_fold``
+  and ``phonetic_key`` (the ``duckdb_*`` twins render the oracle side).
+  This is the engine's default unit scorer (and the
   DuckDB-oracle-expressible one). The reference uses fuzzywuzzy fuzz.ratio
   with acceptance threshold 20 (src/linker.py:129,171,177); at that
   threshold the accept/reject decision is insensitive to which ratio is
@@ -23,13 +25,18 @@ from difflib import SequenceMatcher
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, functions as F, types as T
+from pyspark.sql import functions as F, types as T
+
+from ..sqltext import lit
 
 
-def levenshtein_ratio(a: Column, b: Column) -> Column:
-    """100 * (1 - lev(a,b) / max(len(a), len(b), 1)) — whole-stage-codegen'd."""
-    denom = F.greatest(F.length(a), F.length(b), F.lit(1))
-    return 100.0 * (F.lit(1.0) - F.levenshtein(a, b).cast("double") / denom.cast("double"))
+def levenshtein_ratio(a: str, b: str) -> str:
+    """100 * (1 - lev(a,b) / max(len(a), len(b), 1)) as Spark SQL text over
+    the expressions ``a`` and ``b`` — whole-stage-codegen'd."""
+    return (
+        f"100.0D * (1.0D - CAST(levenshtein({a}, {b}) AS DOUBLE) / "
+        f"CAST(greatest(length({a}), length({b}), 1) AS DOUBLE))"
+    )
 
 
 def duckdb_levenshtein_ratio(a: str, b: str) -> str:
@@ -193,9 +200,26 @@ def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
     """Operates on UTF-8 bytes (not codepoints) — byte-for-byte identical to
     DuckDB's jaro_winkler_similarity (verified in tests). Batch-vectorized
     via numpy (_jw_batch); no per-row Python in the hot path."""
-    a_bytes = [x.encode("utf-8") for x in a.fillna("")]
-    b_bytes = [x.encode("utf-8") for x in b.fillna("")]
-    return pd.Series(_jw_batch(a_bytes, b_bytes))
+    return pd.Series(_jw_batch(_utf8(a), _utf8(b)))
+
+
+@F.pandas_udf(T.StructType([
+    T.StructField("given", T.DoubleType()), T.StructField("family", T.DoubleType()),
+]))
+def jaro_winkler_names(
+    given: pd.Series, a_given: pd.Series, family: pd.Series, a_family: pd.Series
+) -> pd.DataFrame:
+    """The two name scores of a person candidate pair — Jaro-Winkler of
+    (given, a_given) and of (family, a_family), as ``jaro_winkler`` computes
+    them — from one Arrow round trip instead of two."""
+    return pd.DataFrame({
+        "given": _jw_batch(_utf8(given), _utf8(a_given)),
+        "family": _jw_batch(_utf8(family), _utf8(a_family)),
+    })
+
+
+def _utf8(s: pd.Series) -> list[bytes]:
+    return [x.encode("utf-8") for x in s.fillna("")]
 
 
 # ASCII folding for scorer inputs: Spark's levenshtein counts codepoints while
@@ -205,8 +229,8 @@ _FOLD_SRC = "äöåüéóáÄÖÅÜÉÓÁ"
 _FOLD_DST = "aoaueoaAOAUEOA"
 
 
-def ascii_fold(col: Column) -> Column:
-    return F.translate(col, _FOLD_SRC, _FOLD_DST)
+def ascii_fold(expr: str) -> str:
+    return f"translate({expr}, '{_FOLD_SRC}', '{_FOLD_DST}')"
 
 
 def duckdb_ascii_fold(expr: str) -> str:
@@ -229,17 +253,18 @@ _PHON_FROM = "bfpvwcgjkqsxzdtlmnr" + "aeiouyh '-"
 _PHON_TO = "1111122222222334556"  # consonant classes; trailing FROM chars deleted
 
 
-def phonetic_key(col: Column) -> Column:
-    """'P' + first folded letter + the next 3 consonant-class codes.
+def phonetic_key(expr: str) -> str:
+    """'P' + first folded letter + the next 3 consonant-class codes, as Spark
+    SQL text over the expression ``expr``.
 
     The 'P' prefix keeps phonetic keys disjoint from the lowercase fam3
     prefix keys they share an exploded block-key column with."""
-    folded = ascii_fold(F.lower(col))
-    codes = F.translate(folded, _PHON_FROM, _PHON_TO)
+    folded = ascii_fold(f"lower({expr})")
+    codes = f"translate({folded}, {lit(_PHON_FROM)}, '{_PHON_TO}')"
     for d in "123456":
         for _ in range(3):  # collapses runs up to 8 — far beyond any name
-            codes = F.replace(codes, F.lit(d + d), F.lit(d))
-    return F.concat(F.lit("P"), F.substring(folded, 1, 1), F.substring(codes, 2, 3))
+            codes = f"replace({codes}, '{d}{d}', '{d}')"
+    return f"concat('P', substring({folded}, 1, 1), substring({codes}, 2, 3))"
 
 
 def duckdb_phonetic_key(expr: str) -> str:

@@ -9,11 +9,15 @@ CSV columns (src/mapping.py:96-317 keys). All extraction is JVM-side
 Output is long-form-free: one row per turn with one nullable column per
 field; a field absent from a turn is null, so the map-side partial agg in
 T2's groupBy collapses each conversation's fields without a second shuffle.
+Both field lists are rendered as Spark SQL text, so each projection reaches
+the JVM in one call instead of one call per Column node.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from ..sqltext import lit
 
 # Register field names, mirroring reference src/mapping.py:96-317.
 FIELDS = [
@@ -31,26 +35,16 @@ def field_pattern(field: str) -> str:
     return rf"\b{field}=([^;]*)"
 
 
-# Column expression trees are immutable and bound by NAME (unresolved until
-# attached to a DataFrame), so the per-field extraction/aggregation lists can
-# be built once and shared by every query in the process — rebuilding them
-# costs one py4j round trip per nested call (hundreds per invocation), pure
-# driver overhead inside the timed pipeline. Built lazily because Column
-# construction needs a live JVM.
-_MENTION_COLS: list | None = None
-_AGG_COLS: list | None = None
-
-
 def extract_mentions(transcripts: DataFrame) -> DataFrame:
     """(conv_id, turn_idx) + one nullable string column per register field."""
-    global _MENTION_COLS
-    if _MENTION_COLS is None:
-        _MENTION_COLS = [
-            F.nullif(F.trim(F.regexp_extract("text", field_pattern(f), 1)), F.lit(""))
-            .alias(f.lower())
+    return transcripts.selectExpr(
+        "conv_id",
+        "turn_idx",
+        *[
+            f"nullif(trim(regexp_extract(text, {lit(field_pattern(f))}, 1)), '') AS {f.lower()}"
             for f in FIELDS
-        ]
-    return transcripts.select("conv_id", "turn_idx", *_MENTION_COLS)
+        ],
+    )
 
 
 def mentions_to_raw_records(mentions: DataFrame) -> DataFrame:
@@ -61,15 +55,15 @@ def mentions_to_raw_records(mentions: DataFrame) -> DataFrame:
     and the record URI minted as DATA_CAS 'p{id}' (reference
     src/csv_to_rdf.py:187-188). One shuffle, keyed by conv_id.
     """
-    global _AGG_COLS
-    if _AGG_COLS is None:
-        _AGG_COLS = [F.max(f.lower()).alias(f.lower()) for f in FIELDS]
-    aggs = _AGG_COLS
-    recs = mentions.groupBy("conv_id").agg(*aggs)
+    # the maxes travel as one struct, so the aggregate list reaches the JVM as
+    # one expression; f.* unpacks it and the optimizer folds the struct away
+    maxes = ", ".join(f"max({f.lower()}) AS {f.lower()}" for f in FIELDS)
+    recs = mentions.groupBy("conv_id").agg(F.expr(f"struct({maxes}) AS f"))
     # take everything after the 'conv_' prefix (no fixed width — a bounded
     # substring would silently truncate and collide large pids)
-    pid = F.expr("substring(conv_id, 6)").cast("bigint")
-    return recs.withColumn("person_id", pid).withColumn(
-        "record_uri",
-        F.concat(F.lit("http://ldf.fi/warsa/casualties/p"), F.col("person_id").cast("string")),
+    return recs.selectExpr(
+        "conv_id",
+        "f.*",
+        "CAST(substring(conv_id, 6) AS BIGINT) AS person_id",
+        "concat('http://ldf.fi/warsa/casualties/p', CAST(CAST(substring(conv_id, 6) AS BIGINT) AS STRING)) AS record_uri",
     )

@@ -19,10 +19,11 @@ src/linker.py:287-291).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import namespaces as NS
 from ..functions.similarity import jaro_winkler
+from ..sqltext import lit, triple_exprs
 
 SCORE_THRESHOLD = 0.88
 
@@ -42,8 +43,8 @@ def link_occupations(
     block_first_char: bool = True,
 ) -> DataFrame:
     """-> triples (record_uri, BIOC.has_occupation, occ_uri)."""
-    recs = records.filter(F.col("occupation_literal").isNotNull()).select(
-        "record_uri", "occupation_literal"
+    recs = records.selectExpr("record_uri", "occupation_literal").where(
+        "occupation_literal IS NOT NULL"
     )
     # Score DISTINCT literals, not rows: the literal vocabulary is tiny
     # relative to the corpus (Zipfian occupations), so the expensive UDF pass
@@ -59,26 +60,23 @@ def link_occupations(
     # ontology, not the data.
     lits = recs.select("occupation_literal").distinct().coalesce(1)
     if block_first_char:
-        cond = F.substring(lits.occupation_literal, 1, 1) == F.substring(occupations.label, 1, 1)
+        cond = F.expr("substring(occupation_literal, 1, 1) = substring(label, 1, 1)")
         cands = lits.join(F.broadcast(occupations), cond)
     else:
         cands = lits.crossJoin(F.broadcast(occupations))
 
     scored = cands.withColumn(
         "score", _jaro_winkler_once(F.col("occupation_literal"), F.col("label"))
-    ).filter(F.col("score") >= threshold)
+    ).where(f"score >= {lit(threshold)}")
 
-    w = Window.partitionBy("occupation_literal").orderBy(F.col("score").desc(), F.col("occ_uri").asc())
-    best_per_lit = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    best_per_lit = scored.selectExpr(
+        "occupation_literal",
+        "occ_uri",
+        "row_number() OVER (PARTITION BY occupation_literal ORDER BY score DESC, occ_uri ASC) AS rn",
+    ).where("rn = 1")
     best = recs.join(
         F.broadcast(best_per_lit.select("occupation_literal", "occ_uri")), "occupation_literal"
     )
-    return best.select(
-        F.col("record_uri").alias("subj"),
-        F.lit(NS.BIOC + "has_occupation").alias("pred"),
-        F.col("occ_uri").alias("obj"),
-        F.lit("uri").alias("obj_type"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("datatype"),
-        F.lit("occupation_links").alias("graph_kind"),
+    return best.selectExpr(
+        *triple_exprs("record_uri", NS.BIOC + "has_occupation", "occ_uri", "occupation_links")
     )

@@ -25,13 +25,15 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import namespaces as NS
 from ..functions.names import strip_prev_name
-from ..functions.similarity import ascii_fold, jaro_winkler, phonetic_key
+from ..functions.similarity import ascii_fold, jaro_winkler_names, phonetic_key
+from ..sqltext import lit, triple_exprs
 
 THRESHOLD = 0.85
+_WS = lit(r"\s+")
 
 # Calibrated logistic weights, fitted offline from labelled training pairs
 # by scripts/fit_link_weights.py (the deterministic stand-in for dedupe's
@@ -49,53 +51,51 @@ def casualty_features(records: DataFrame, rank_links: DataFrame, unit_links: Dat
     """J7a — the reference's _generate_casualties_dict as aggregation joins:
     one row per record with given/family/rank/rank_level/birth_place/dates/
     units (src/linker.py:40-83; golden fixture src/tests.py:32-59)."""
-    base = records.select(
+    base = records.selectExpr(
         "record_uri",
-        F.col("given_names").alias("given"),
+        "given_names AS given",
         # family with '(ent. X)' -> 'X' in place (src/linker.py:70)
-        strip_prev_name(F.col("family_name")).alias("family"),
-        F.date_format("date_of_birth", "yyyy-MM-dd").alias("birth_iso"),
-        F.date_format("date_of_death", "yyyy-MM-dd").alias("death_iso"),
+        f"{strip_prev_name('family_name')} AS family",
+        "date_format(date_of_birth, 'yyyy-MM-dd') AS birth_iso",
+        "date_format(date_of_death, 'yyyy-MM-dd') AS death_iso",
         "municipality_of_birth",
     )
-    ranks = rank_links.select(F.col("subj").alias("record_uri"), F.col("obj").alias("rank_uri"))
-    units = (
-        unit_links.groupBy("subj")
-        .agg(F.sort_array(F.collect_set("obj")).alias("units"))
-        .withColumnRenamed("subj", "record_uri")
+    ranks = rank_links.selectExpr("subj AS record_uri", "obj AS rank_uri")
+    units = unit_links.groupBy(F.expr("subj AS record_uri")).agg(
+        F.expr("sort_array(collect_set(obj)) AS units")
     )
-    lvl = ranks_dim.select("rank_uri", F.col("level").alias("rank_level"))
+    lvl = ranks_dim.selectExpr("rank_uri", "level AS rank_level")
     # birth_place = {current, wartime} municipality of the birth municipality,
     # nulls dropped (src/linker.py:54-56,71)
-    mun = munics_dim.select(
-        F.col("mun_uri").alias("municipality_of_birth"),
-        F.array_compact(
-            F.array_distinct(F.array("current_municipality", "wartime_municipality"))
-        ).alias("birth_place"),
+    mun = munics_dim.selectExpr(
+        "mun_uri AS municipality_of_birth",
+        "array_compact(array_distinct(array(current_municipality, wartime_municipality)))"
+        " AS birth_place",
     )
     return (
         base.join(ranks, "record_uri", "left")
         .join(F.broadcast(lvl), "rank_uri", "left")
         .join(units, "record_uri", "left")
         .join(F.broadcast(mun), "municipality_of_birth", "left")
-        .select(
+        .selectExpr(
             "record_uri", "given", "family", "birth_iso", "death_iso",
-            F.when(F.col("rank_uri").isNotNull(), F.array("rank_uri")).alias("rank"),
+            "CASE WHEN rank_uri IS NOT NULL THEN array(rank_uri) END AS `rank`",
             "rank_level",
-            F.col("birth_place"),
+            "birth_place",
             "units",
         )
     )
 
 
 def _block_keys(
-    family: F.Column,
-    death_iso: F.Column,
-    birth_iso: F.Column,
-    given: F.Column | None = None,
+    family: str,
+    death_iso: str,
+    birth_iso: str,
+    given: str | None = None,
     name_only_always: bool = False,
-) -> F.Column:
-    """Four blocking keys per row: (folded family 3-prefix × death|birth
+) -> str:
+    """Four blocking keys per row, as Spark SQL text over the given column
+    expressions: (folded family 3-prefix × death|birth
     year) plus (phonetic consonant-skeleton key × death|birth year). The
     year union keeps recall when one date is dirty (a record whose death
     date failed conversion still blocks on its birth year); the phonetic
@@ -118,22 +118,19 @@ def _block_keys(
     (~0.2% under the reference's documented dirt rates), and the key itself
     is the FULL name skeleton + given initial — far finer than the fam3
     prefix — so per-block fan-out stays bounded."""
-    # F.concat (not concat_ws) everywhere: concat is NULL-strict, so a null
+    # concat (not concat_ws) everywhere: concat is NULL-strict, so a null
     # family/given yields a NULL key, which an equi-join never matches —
     # exactly the DuckDB oracle's NULL-equality semantics. concat_ws would
     # silently DROP the null component and let two null-named rows block
     # together on the year alone, a Spark/oracle divergence on any corpus
     # with missing names.
-    fam3 = F.substring(ascii_fold(F.lower(family)), 1, 3)
+    fam3 = f"substring({ascii_fold(f'lower({family})')}, 1, 3)"
     phon = phonetic_key(family)
-    dy = F.concat(F.lit("D"), F.coalesce(F.substring(death_iso, 1, 4), F.lit("?")))
-    by = F.concat(F.lit("B"), F.coalesce(F.substring(birth_iso, 1, 4), F.lit("?")))
-    sep = F.lit("|")
-    base = F.array(
-        F.concat(fam3, sep, dy),
-        F.concat(fam3, sep, by),
-        F.concat(phon, sep, dy),
-        F.concat(phon, sep, by),
+    dy = f"concat('D', coalesce(substring({death_iso}, 1, 4), '?'))"
+    by = f"concat('B', coalesce(substring({birth_iso}, 1, 4), '?'))"
+    base = (
+        f"array(concat({fam3}, '|', {dy}), concat({fam3}, '|', {by}), "
+        f"concat({phon}, '|', {dy}), concat({phon}, '|', {by}))"
     )
     if given is None:
         return base
@@ -142,30 +139,60 @@ def _block_keys(
     # in-place '(ent. X)' substitution) must block against an actor named by
     # EITHER token — the reference's Lucene index is token-analyzed, so a
     # one-token query matches multi-token names for free.
-    toks = F.split(family, r"\s+")
-    init = F.substring(ascii_fold(F.lower(given)), 1, 1)
+    toks = f"split({family}, {_WS})"
+    init = f"substring({ascii_fold(f'lower({given})')}, 1, 1)"
 
-    def nk(c: F.Column) -> F.Column:
-        return F.concat(F.lit("N|"), phonetic_key(c), sep, init)
+    def nk(c: str) -> str:
+        return f"concat('N|', {phonetic_key(c)}, '|', {init})"
 
-    name_keys = F.array_distinct(
-        F.array(nk(family), nk(F.element_at(toks, 1)), nk(F.element_at(toks, -1)))
+    name_keys = (
+        f"array_distinct(array({nk(family)}, {nk(f'element_at({toks}, 1)')}, "
+        f"{nk(f'element_at({toks}, -1)')}))"
     )
     if name_only_always:
-        return F.concat(base, name_keys)
-    return F.when(
-        death_iso.isNull() & birth_iso.isNull(), F.concat(base, name_keys)
-    ).otherwise(base)
+        return f"concat({base}, {name_keys})"
+    return (
+        f"CASE WHEN ({death_iso}) IS NULL AND ({birth_iso}) IS NULL "
+        f"THEN concat({base}, {name_keys}) ELSE {base} END"
+    )
 
 
-def _eq_feature(a: F.Column, b: F.Column) -> F.Column:
+def _eq_feature(a: str, b: str) -> str:
     """1.0 equal, 0.0 differing, 0.5 when either side missing (dedupe's
     'has missing' handling)."""
+    return f"CASE WHEN {a} IS NULL OR {b} IS NULL THEN 0.5D WHEN {a} = {b} THEN 1.0D ELSE 0.0D END"
+
+
+def _contains_feature(arr: str, x: str) -> str:
+    """1.0 when ``x`` is in ``arr``, 0.0 when not, 0.5 when either side is
+    missing. Empty (non-null) arrays carry no evidence either way — dedupe's
+    missing-value 0.5, same as null (array_compact can yield [] when every
+    variant was null)."""
     return (
-        F.when(a.isNull() | b.isNull(), F.lit(0.5))
-        .when(a == b, F.lit(1.0))
-        .otherwise(F.lit(0.0))
+        f"CASE WHEN {arr} IS NULL OR size({arr}) = 0 OR {x} IS NULL THEN 0.5D "
+        f"WHEN array_contains({arr}, {x}) THEN 1.0D ELSE 0.0D END"
     )
+
+
+# The fused name scorer feeds the score filter; marked non-deterministic so
+# Catalyst cannot push that filter below the projection and evaluate the
+# UDF a second time (the same guard as the occupation linker's scorer).
+_jaro_winkler_names_once = jaro_winkler_names.asNondeterministic()
+
+_FEATURES = {
+    "jw_given": "jw.given",
+    "jw_family": "jw.family",
+    "birth_eq": _eq_feature("birth_iso", "a_birth"),
+    "death_eq": _eq_feature("death_iso", "a_death"),
+    "place_eq": _contains_feature("birth_place", "a_place"),
+    "rank_eq": _contains_feature("`rank`", "a_rank"),
+    "unit_eq": _contains_feature("units", "a_unit"),
+    "level_sim": (
+        "CASE WHEN rank_level IS NULL OR a_rank_level IS NULL THEN 0.5D "
+        "ELSE 1.0D - abs(rank_level - a_rank_level) "
+        "/ CAST(greatest(rank_level, a_rank_level, 1) AS DOUBLE) END"
+    ),
+}
 
 
 def score_pairs(pairs: DataFrame) -> DataFrame:
@@ -173,56 +200,17 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     casualty side (given, family, birth_iso, death_iso, rank, rank_level,
     birth_place, units) vs actor side (a_given, a_family, a_birth, a_death,
     a_rank, a_rank_level, a_place, a_unit)."""
-    feats = (
-        pairs.withColumn("jw_given", jaro_winkler(F.lower("given"), F.lower("a_given")))
-        .withColumn("jw_family", jaro_winkler(F.lower("family"), F.lower("a_family")))
-        .withColumn("birth_eq", _eq_feature(F.col("birth_iso"), F.col("a_birth")))
-        .withColumn("death_eq", _eq_feature(F.col("death_iso"), F.col("a_death")))
-        # empty (non-null) arrays carry no evidence either way — dedupe's
-        # missing-value 0.5, same as null (array_compact can yield [] when
-        # every variant was null)
-        .withColumn(
-            "place_eq",
-            F.when(
-                F.col("birth_place").isNull() | (F.size("birth_place") == 0)
-                | F.col("a_place").isNull(),
-                F.lit(0.5),
-            )
-            .when(F.array_contains("birth_place", F.col("a_place")), F.lit(1.0))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "rank_eq",
-            F.when(
-                F.col("rank").isNull() | (F.size("rank") == 0) | F.col("a_rank").isNull(),
-                F.lit(0.5),
-            )
-            .when(F.array_contains("rank", F.col("a_rank")), F.lit(1.0))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "unit_eq",
-            F.when(
-                F.col("units").isNull() | (F.size("units") == 0) | F.col("a_unit").isNull(),
-                F.lit(0.5),
-            )
-            .when(F.array_contains("units", F.col("a_unit")), F.lit(1.0))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "level_sim",
-            F.when(F.col("rank_level").isNull() | F.col("a_rank_level").isNull(), F.lit(0.5))
-            .otherwise(
-                1.0
-                - F.abs(F.col("rank_level") - F.col("a_rank_level"))
-                / F.greatest(F.col("rank_level"), F.col("a_rank_level"), F.lit(1)).cast("double")
-            ),
-        )
+    jw = _jaro_winkler_names_once(
+        F.expr("lower(given)"), F.expr("lower(a_given)"),
+        F.expr("lower(family)"), F.expr("lower(a_family)"),
     )
-    z = F.lit(BIAS)
-    for name, w in WEIGHTS.items():
-        z = z + F.lit(w) * F.col(name)
-    return feats.withColumn("score", F.lit(1.0) / (F.lit(1.0) + F.exp(-z)))
+    feats = (
+        pairs.withColumn("jw", jw)
+        .selectExpr("*", *[f"{e} AS {name}" for name, e in _FEATURES.items()])
+        .drop("jw")
+    )
+    z = " + ".join([lit(BIAS)] + [f"{lit(w)} * {name}" for name, w in WEIGHTS.items()])
+    return feats.selectExpr("*", f"1.0D / (1.0D + exp(-({z}))) AS score")
 
 
 def _greedy_match(scored: DataFrame, rounds: int = 3) -> DataFrame:
@@ -234,21 +222,21 @@ def _greedy_match(scored: DataFrame, rounds: int = 3) -> DataFrame:
     remaining = scored
     matched = []
     for _ in range(rounds):
-        wl = Window.partitionBy("record_uri").orderBy(
-            F.col("score").desc(), F.col("actor_uri").asc()
-        )
-        wr = Window.partitionBy("actor_uri").orderBy(
-            F.col("score").desc(), F.col("record_uri").asc()
-        )
         # lazy checkpoint per round: each m feeds the result union AND two
         # anti-joins, and remaining(i+1) embeds remaining(i) through them —
         # without the cut the logical plan grows 3^rounds (measured: rounds
         # beyond ~8 hang in the optimizer on a 40-row input). The cut makes
         # growth linear and computes each round's matching once.
         m = (
-            remaining.withColumn("rl", F.row_number().over(wl))
-            .withColumn("rr", F.row_number().over(wr))
-            .filter((F.col("rl") == 1) & (F.col("rr") == 1))
+            remaining.selectExpr(
+                "record_uri",
+                "actor_uri",
+                "row_number() OVER (PARTITION BY record_uri"
+                " ORDER BY score DESC, actor_uri ASC) AS rl",
+                "row_number() OVER (PARTITION BY actor_uri"
+                " ORDER BY score DESC, record_uri ASC) AS rr",
+            )
+            .where("rl = 1 AND rr = 1")
             .select("record_uri", "actor_uri")
             .localCheckpoint(eager=False)
         )
@@ -299,34 +287,21 @@ def link_persons(
     explicit, deterministic, and observable via :func:`oversized_block_keys`
     (log it, alert on it, or route dropped blocks to a finer key). A record
     participating in several keys still links through its surviving keys."""
-    left = features.withColumn(
-        "bk",
-        F.explode(
-            _block_keys(
-                F.col("family"), F.col("death_iso"), F.col("birth_iso"), F.col("given")
-            )
-        ),
+    left = features.selectExpr(
+        "*", f"explode({_block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
     )
-    right = actors.select(
+    right = actors.selectExpr(
         "actor_uri",
-        F.col("given").alias("a_given"),
-        F.col("family").alias("a_family"),
-        F.col("birth_iso").alias("a_birth"),
-        F.col("death_iso").alias("a_death"),
-        F.col("rank_uri").alias("a_rank"),
-        F.col("rank_level").alias("a_rank_level"),
-        F.col("unit_uri").alias("a_unit"),
-        F.col("birth_place").alias("a_place"),
-    ).withColumn(
-        "bk",
-        F.explode(
-            _block_keys(
-                F.col("a_family"),
-                F.col("a_death"),
-                F.col("a_birth"),
-                F.col("a_given"),
-                name_only_always=True,
-            )
+        "given AS a_given",
+        "family AS a_family",
+        "birth_iso AS a_birth",
+        "death_iso AS a_death",
+        "rank_uri AS a_rank",
+        "rank_level AS a_rank_level",
+        "unit_uri AS a_unit",
+        "birth_place AS a_place",
+        "explode({}) AS bk".format(
+            _block_keys("family", "death_iso", "birth_iso", "given", name_only_always=True)
         ),
     )
 
@@ -338,10 +313,8 @@ def link_persons(
     if salt_buckets > 1:
         # deterministic salting for Zipfian blocks: big side takes a
         # hash-derived bucket, dictionary side replicates into every bucket
-        left = left.withColumn("salt", F.pmod(F.hash("record_uri"), F.lit(salt_buckets)))
-        right = right.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-        )
+        left = left.selectExpr("*", f"pmod(hash(record_uri), {salt_buckets}) AS salt")
+        right = right.selectExpr("*", f"explode(sequence(0, {salt_buckets - 1})) AS salt")
         join_keys = ["bk", "salt"]
     else:
         join_keys = ["bk"]
@@ -356,7 +329,7 @@ def link_persons(
     # cut is the scored-pairs table materialization.
     scored = (
         score_pairs(pairs)
-        .filter(F.col("score") >= threshold)
+        .where(f"score >= {lit(threshold)}")
         .select("record_uri", "actor_uri", "score")
         .localCheckpoint(eager=False)
     )
@@ -375,14 +348,8 @@ def link_persons(
     # pair set (tiny vs the corpus); a production pipeline materializes
     # `scored` once (T-table) so rounds never rescore.
     mutual = _greedy_match(scored, rounds=3)
-    return mutual.select(
-        F.col("record_uri").alias("subj"),
-        F.lit(NS.CRM + "P70_documents").alias("pred"),
-        F.col("actor_uri").alias("obj"),
-        F.lit("uri").alias("obj_type"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("datatype"),
-        F.lit("documents_links").alias("graph_kind"),
+    return mutual.selectExpr(
+        *triple_exprs("record_uri", NS.CRM + "P70_documents", "actor_uri", "documents_links")
     )
 
 

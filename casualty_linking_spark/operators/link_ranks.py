@@ -12,34 +12,10 @@ order, SURVEY §4.3).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import namespaces as NS
-
-# Per-call Column pieces built once per process (immutable, name-bound; the
-# same py4j-overhead rationale as the other linkers' memoized trees).
-_MISC: dict | None = None
-
-
-def _misc() -> dict:
-    global _MISC
-    if _MISC is None:
-        _MISC = {
-            "join_cond": F.lower(F.trim(F.col("rank_literal"))) == F.lower(F.col("label")),
-            "w": Window.partitionBy("rank_literal").orderBy(
-                F.col("is_pref").desc(), F.col("rank_uri").asc()
-            ),
-            "row": [
-                F.col("record_uri").alias("subj"),
-                F.lit(NS.cas("rank")).alias("pred"),
-                F.col("rank_uri").alias("obj"),
-                F.lit("uri").alias("obj_type"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("string").alias("datatype"),
-                F.lit("rank_links").alias("graph_kind"),
-            ],
-        }
-    return _MISC
+from ..sqltext import triple_exprs
 
 
 def link_ranks(records: DataFrame, rank_labels: DataFrame) -> DataFrame:
@@ -50,12 +26,13 @@ def link_ranks(records: DataFrame, rank_labels: DataFrame) -> DataFrame:
     a broadcast hash join — no shuffle of the record stream at all.
     coalesce(1) after the vocabulary distinct: same single-task reasoning
     as the unit/occupation linkers."""
-    m = _misc()
-    recs = records.filter(F.col("rank_literal").isNotNull()).select(
-        "record_uri", "rank_literal"
-    )
+    recs = records.selectExpr("record_uri", "rank_literal").where("rank_literal IS NOT NULL")
     lits = recs.select("rank_literal").distinct().coalesce(1)
-    cands = lits.join(F.broadcast(rank_labels), m["join_cond"])
-    best_lit = cands.withColumn("rn", F.row_number().over(m["w"])).filter(F.col("rn") == 1)
+    cands = lits.join(F.broadcast(rank_labels), F.expr("lower(trim(rank_literal)) = lower(label)"))
+    best_lit = cands.selectExpr(
+        "rank_literal",
+        "rank_uri",
+        "row_number() OVER (PARTITION BY rank_literal ORDER BY is_pref DESC, rank_uri ASC) AS rn",
+    ).where("rn = 1")
     best = recs.join(F.broadcast(best_lit.select("rank_literal", "rank_uri")), "rank_literal")
-    return best.select(*m["row"])
+    return best.selectExpr(*triple_exprs("record_uri", NS.cas("rank"), "rank_uri", "rank_links"))

@@ -25,11 +25,12 @@ materializes only in per-task candidate fan-out, bounded by the n-gram cap.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import namespaces as NS
 from ..functions.dates import date_cmp_str
 from ..functions.similarity import ascii_fold, levenshtein_ratio
+from ..sqltext import lit, triple_exprs
 
 COVER_NUMBER_SCORE_LIMIT = 20
 # the reference's ARPA candidate service allows up to 10-gram queries
@@ -59,87 +60,30 @@ ABBREVIATIONS = [
 ]
 
 
-def preprocess_unit(col: F.Column) -> F.Column:
+_WS = lit(r"\s+")
+_LABEL_PUNCT = lit(r"[,./\s]")
+
+
+def preprocess_unit(expr: str) -> str:
     """P14 unit-literal preprocessor: expand abbreviations, collapse space."""
-    out = col
+    out = expr
     for pat, repl in ABBREVIATIONS:
-        out = F.regexp_replace(out, r"\b" + pat + r"\b", repl)
-    return F.trim(F.regexp_replace(out, r"\s+", " "))
+        word = lit(r"\b" + pat + r"\b")
+        out = f"regexp_replace({out}, {word}, {lit(repl)})"
+    return f"trim(regexp_replace({out}, {_WS}, ' '))"
 
 
-def normalize_label(col: F.Column) -> F.Column:
+def normalize_label(expr: str) -> str:
     """units.sparql:25 normalization: strip [,./ \\s], lowercase."""
-    return F.lower(F.regexp_replace(col, r"[,./\s]", ""))
+    return f"lower(regexp_replace({expr}, {_LABEL_PUNCT}, ''))"
 
 
-def _link_row(subj: F.Column, unit: F.Column) -> list[F.Column]:
-    return [
-        subj.alias("subj"),
-        F.lit(NS.cas("unit")).alias("pred"),
-        unit.alias("obj"),
-        F.lit("uri").alias("obj_type"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("datatype"),
-        F.lit("unit_links").alias("graph_kind"),
-    ]
-
-
-# Memoized Column pieces (pure functions of column names + module constants;
-# rebuilding the 13-regexp preprocessor and n-gram lambda trees cost ~1.7 s
-# of py4j driver time per link_units call). Lazy: needs a live JVM. The
-# label-dictionary frame is memoized per input DataFrame id for the same
-# reason (and so its broadcast build is shared across queries).
-_RECS_COLS: list | None = None
-_NGRAM_COL: F.Column | None = None
-_PREP_COL: F.Column | None = None
-_DIM_B_MEMO: dict[int, tuple[DataFrame, DataFrame]] = {}
-
-
-def _prep_col() -> F.Column:
-    global _PREP_COL
-    if _PREP_COL is None:
-        _PREP_COL = preprocess_unit(F.col("unit_literal"))
-    return _PREP_COL
-
-
-# Remaining per-call Column pieces, built once (same rationale as above).
-_MISC: dict | None = None
-
-
-def _misc() -> dict:
-    global _MISC
-    if _MISC is None:
-        _MISC = {
-            "score_a": levenshtein_ratio(
-                ascii_fold(F.col("label")), ascii_fold(F.col("unit_literal"))
-            ),
-            "w_a": Window.partitionBy("unit_code", "unit_literal").orderBy(
-                F.col("score").desc(), F.col("unit_uri").asc()
-            ),
-            "period_cols": [
-                F.col("record_uri").alias("subj"),
-                F.lit(NS.RELATED_PERIOD).alias("pred"),
-                F.lit(NS.WINTER_WAR).alias("obj"),
-                F.lit("uri").alias("obj_type"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("string").alias("datatype"),
-                F.lit("unit_links").alias("graph_kind"),
-            ],
-            "norm_ngram": normalize_label(F.col("ngram")),
-            "period_match": (
-                F.col("conflict")
-                == F.when(
-                    F.col("death_cmp") < WINTER_WAR_CUTOFF, F.lit(NS.WINTER_WAR)
-                ).otherwise(F.lit(NS.CONTINUATION_WAR))
-            ).cast("int"),
-            "w_b": Window.partitionBy("record_uri").orderBy(
-                F.col("period_match").desc(),
-                F.length("norm_ngram").desc(),
-                F.col("unit_uri").asc(),
-            ),
-            "link_row": _link_row(F.col("record_uri"), F.col("unit_uri")),
-        }
-    return _MISC
+# contiguous word n-grams of the token array, n = 1..MAX_NGRAM
+_NGRAMS = (
+    f"flatten(transform(sequence(1, least({MAX_NGRAM}, size(tokens))), "
+    "n -> transform(sequence(0, size(tokens) - n), "
+    "i -> array_join(slice(tokens, i + 1, n), ' '))))"
+)
 
 
 def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -147,13 +91,10 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
 
     ``unit_labels``: exploded (unit_uri, label, cover_number, conflict).
     """
-    global _RECS_COLS
-    if _RECS_COLS is None:
-        _RECS_COLS = [
-            F.col("record_uri"), F.col("unit_code"), F.col("unit_literal"),
-            date_cmp_str(F.col("date_of_death"), F.col("date_of_death_str")).alias("death_cmp"),
-        ]
-    recs = records.select(*_RECS_COLS)
+    recs = records.selectExpr(
+        "record_uri", "unit_code", "unit_literal",
+        f"{date_cmp_str('date_of_death', 'date_of_death_str')} AS death_cmp",
+    )
 
     # ---- Path A: cover-number join + fuzzy argmax ----
     # Scoring runs on DISTINCT (unit_code, unit_literal) pairs — the literal
@@ -166,21 +107,24 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
     # near-empty shuffle-partition tasks (same reasoning as the occupation
     # linker's vocabulary coalesce).
     pairs = (
-        recs.filter(F.col("unit_code").isNotNull())
+        recs.where("unit_code IS NOT NULL")
         .select("unit_code", "unit_literal").distinct().coalesce(1)
     )
     cands_a = pairs.join(
-        F.broadcast(unit_labels.filter(F.col("cover_number").isNotNull())),
-        F.col("unit_code") == F.col("cover_number"),
+        F.broadcast(unit_labels.where("cover_number IS NOT NULL")),
+        F.expr("unit_code = cover_number"),
     )
     # score = edit-distance ratio on accent-folded raw label vs literal
     # (reference: max fuzz.ratio over the unit's labels, src/linker.py:171)
-    m = _misc()
-    scored_a = cands_a.withColumn("score", m["score_a"])
-    per_unit = scored_a.groupBy("unit_code", "unit_literal", "unit_uri").agg(
-        F.max("score").alias("score")
+    score = levenshtein_ratio(ascii_fold("label"), ascii_fold("unit_literal"))
+    per_unit = cands_a.groupBy("unit_code", "unit_literal", "unit_uri").agg(
+        F.expr(f"max({score}) AS score")
     )
-    best_pair = per_unit.withColumn("rn", F.row_number().over(m["w_a"])).filter(F.col("rn") == 1)
+    best_pair = per_unit.selectExpr(
+        "unit_code", "unit_literal", "unit_uri", "score",
+        "row_number() OVER (PARTITION BY unit_code, unit_literal"
+        " ORDER BY score DESC, unit_uri ASC) AS rn",
+    ).where("rn = 1")
     # one broadcast join covers every record: null cover keys simply don't
     # match, leaving score null — so both the accepted set and the
     # fall-through set (no cover / unknown cover / sub-threshold,
@@ -191,40 +135,24 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
         ["unit_code", "unit_literal"],
         "left",
     )
-    links_a = scored_recs.filter(F.col("score") >= COVER_NUMBER_SCORE_LIMIT)
-    path_b = scored_recs.filter(
-        F.col("unit_code").isNull()
-        | F.col("score").isNull()
-        | (F.col("score") < COVER_NUMBER_SCORE_LIMIT)
+    links_a = scored_recs.where(f"score >= {COVER_NUMBER_SCORE_LIMIT}")
+    path_b = scored_recs.where(
+        f"unit_code IS NULL OR score IS NULL OR score < {COVER_NUMBER_SCORE_LIMIT}"
     )
 
     # Winter-War tagging (string compare on the literal the reference sees)
-    period = path_b.filter(F.col("death_cmp") < WINTER_WAR_CUTOFF).select(*m["period_cols"])
+    period = path_b.where(f"death_cmp < {lit(WINTER_WAR_CUTOFF)}").selectExpr(
+        *triple_exprs("record_uri", NS.RELATED_PERIOD, lit(NS.WINTER_WAR), "unit_links")
+    )
 
     # ---- Path B: n-gram candidates against normalized labels ----
     # guard: sequence(1, 0) would produce a *descending* sequence in Spark,
     # so empty/missing literals must be filtered before n-gram generation
-    prep = (
-        path_b.filter(F.col("unit_literal").isNotNull() & (F.trim("unit_literal") != ""))
-        .withColumn("prep", _prep_col())
-        .withColumn("tokens", F.split(F.col("prep"), r"\s+"))
-        .filter(F.size("tokens") > 0)
-    )
-    # contiguous word n-grams, n = 1..MAX_NGRAM
-    global _NGRAM_COL
-    if _NGRAM_COL is None:
-        _NGRAM_COL = F.explode(
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), F.least(F.lit(MAX_NGRAM), F.size("tokens"))),
-                    lambda n: F.transform(
-                        F.sequence(F.lit(0), F.size("tokens") - n),
-                        lambda i: F.array_join(F.slice("tokens", i + 1, n), " "),
-                    ),
-                )
-            )
-        ).alias("ngram")
-    ngrams = prep.select("record_uri", "death_cmp", _NGRAM_COL)
+    prep = path_b.where("unit_literal IS NOT NULL AND trim(unit_literal) != ''").selectExpr(
+        "record_uri", "death_cmp",
+        f"split({preprocess_unit('unit_literal')}, {_WS}) AS tokens",
+    ).where("size(tokens) > 0")
+    ngrams = prep.selectExpr("record_uri", "death_cmp", f"explode({_NGRAMS}) AS ngram")
     # Each dictionary label yields TWO normalized keys: the raw form and the
     # abbreviation-EXPANDED form. The record side always expands, so the
     # coverless literal '2./JR 8' becomes '2./Jalkaväkirykmentti 8' and can
@@ -236,39 +164,32 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
     # this from its
     # Lucene index analyzing several label variants per unit
     # (arpa_services/warsa_casualties_actor_units).
-    # the memo entry pins the keyed DataFrame: id() of a garbage-collected
-    # object can be reused, so the key object must stay alive for the key
-    # to remain unambiguous
-    dim_key = id(unit_labels)
-    if dim_key not in _DIM_B_MEMO:
-        _DIM_B_MEMO[dim_key] = (
-            unit_labels,
-            F.broadcast(
-                unit_labels.select(
-                    "unit_uri",
-                    "conflict",
-                    F.explode(
-                        F.array_distinct(
-                            F.array(
-                                normalize_label(F.col("label")),
-                                normalize_label(preprocess_unit(F.col("label"))),
-                            )
-                        )
-                    ).alias("norm_label"),
-                )
-            ),
+    dim_b = F.broadcast(
+        unit_labels.selectExpr(
+            "unit_uri",
+            "conflict",
+            f"explode(array_distinct(array({normalize_label('label')}, "
+            f"{normalize_label(preprocess_unit('label'))}))) AS norm_label",
         )
-    dim_b = _DIM_B_MEMO[dim_key][1]
-    cands_b = ngrams.withColumn("norm_ngram", m["norm_ngram"]).join(
-        dim_b, F.col("norm_ngram") == F.col("norm_label")
+    )
+    cands_b = ngrams.selectExpr("*", f"{normalize_label('ngram')} AS norm_ngram").join(
+        dim_b, F.expr("norm_ngram = norm_label")
     )
     # war-period validator (Validator(temp_graph) disambiguation,
     # src/linker.py:202-208): candidates whose conflict matches the record's
     # period win; then longest ngram, then URI.
-    validated = cands_b.withColumn("period_match", m["period_match"])
-    best_b = validated.withColumn("rn", F.row_number().over(m["w_b"])).filter(F.col("rn") == 1)
+    period_match = (
+        f"CAST(conflict = CASE WHEN death_cmp < {lit(WINTER_WAR_CUTOFF)} "
+        f"THEN {lit(NS.WINTER_WAR)} ELSE {lit(NS.CONTINUATION_WAR)} END AS INT)"
+    )
+    best_b = cands_b.selectExpr(
+        "record_uri", "unit_uri",
+        f"row_number() OVER (PARTITION BY record_uri ORDER BY {period_match} DESC, "
+        "length(norm_ngram) DESC, unit_uri ASC) AS rn",
+    ).where("rn = 1")
 
-    links = links_a.select(*m["link_row"]).unionByName(
-        best_b.select(*m["link_row"])
+    link_row = triple_exprs("record_uri", NS.cas("unit"), "unit_uri", "unit_links")
+    links = links_a.selectExpr(*link_row).unionByName(
+        best_b.selectExpr(*link_row)
     ).dropDuplicates(["subj", "pred", "obj"])
     return links, period

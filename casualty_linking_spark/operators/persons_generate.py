@@ -23,73 +23,83 @@ Event semantics pinned by the reference:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .. import namespaces as NS
 from ..functions.dates import date_cmp_str
+from ..sqltext import lit, triple_exprs
 
 PERSON_URI_PREFIX = "http://ldf.fi/warsa/actors/person_"
 EVENT_PREFIX = "http://ldf.fi/warsa/events/"
 TIMES_PREFIX = "http://ldf.fi/warsa/events/times/"
 
+# every triple entry below is Spark SQL text; a graph's whole entry array
+# reaches the JVM as one expression (see sqltext.py)
+_LOCAL_ID = "regexp_extract(record_uri, '/(p[^/]+)$', 1)"
 
-def _t(subj, pred, obj, obj_type="uri", lang=None, datatype=None):
-    return F.when(
-        obj.isNotNull() & subj.isNotNull(),
-        F.struct(
-            subj.alias("subj"),
-            (pred if isinstance(pred, Column) else F.lit(pred)).alias("pred"),
-            obj.alias("obj"),
-            F.lit(obj_type).alias("obj_type"),
-            (lang if isinstance(lang, Column) else F.lit(lang).cast("string")).alias("lang"),
-            (datatype if isinstance(datatype, Column) else F.lit(datatype).cast("string")).alias("datatype"),
-        ),
+
+def _t(subj: str, pred: str, obj: str, obj_type: str = "uri", lang: str | None = None,
+       datatype: str | None = None) -> str:
+    """One triple entry: a struct when ``subj`` and ``obj`` (SQL
+    expressions) are both non-null, else NULL. ``pred``, ``obj_type`` and
+    ``lang`` are constants; ``datatype`` is a SQL expression."""
+    return (
+        f"CASE WHEN isnotnull({obj}) AND isnotnull({subj}) THEN struct("
+        f"{subj} AS subj, {lit(pred)} AS pred, {obj} AS obj, {lit(obj_type)} AS obj_type, "
+        f"CAST({lit(lang)} AS STRING) AS lang, "
+        f"{datatype or 'CAST(NULL AS STRING)'} AS datatype) END"
     )
 
 
-def _finalize(df: DataFrame, entries: list, graph_kind: str) -> DataFrame:
-    out = df.select(F.explode(F.array_compact(F.array(*entries))).alias("t"))
-    return out.select(
-        "t.subj", "t.pred", "t.obj", "t.obj_type", "t.lang", "t.datatype",
-        F.lit(graph_kind).alias("graph_kind"),
+def _finalize(df: DataFrame, entries: list[str], graph_kind: str, more: str | None = None) -> DataFrame:
+    """One row per non-null entry (plus the entries of the array expression
+    ``more``), deduplicated on (subj, pred, obj)."""
+    arr = f"array({', '.join(entries)})"
+    if more:
+        arr = f"concat({arr}, {more})"
+    return df.selectExpr(
+        f"inline(array_compact({arr}))", f"{lit(graph_kind)} AS graph_kind"
     ).dropDuplicates(["subj", "pred", "obj"])
 
 
 def _event_entries(
-    base: DataFrame,
     event_type: str,
     prefix: str,
     relation_prop: str,
     date_col: str | None,
     place_col: str | None,
-    lbl_fi: Column,
-    lbl_en: Column,
-) -> tuple[DataFrame, Column, list]:
-    """Shared generate_event core (src/person_generator.py:21-54)."""
-    local_id = F.regexp_extract("record_uri", r"/(p[^/]+)$", 1)
-    ev = F.concat(F.lit(EVENT_PREFIX + prefix), local_id)
+    lbl_fi: str,
+    lbl_en: str,
+) -> tuple[str, list[str]]:
+    """Shared generate_event core (src/person_generator.py:21-54): the event
+    URI expression and its triple entries."""
+    ev = f"concat({lit(EVENT_PREFIX + prefix)}, {_LOCAL_ID})"
     entries = [
-        _t(ev, NS.RDF_TYPE, F.lit(event_type)),
-        _t(ev, relation_prop, F.col("person_uri")),
-        _t(ev, NS.DCT_SOURCE, F.lit(NS.NARC_SOURCE)),
+        _t(ev, NS.RDF_TYPE, lit(event_type)),
+        _t(ev, relation_prop, "person_uri"),
+        _t(ev, NS.DCT_SOURCE, lit(NS.NARC_SOURCE)),
         _t(ev, NS.SKOS_PREF_LABEL, lbl_fi, "literal", "fi"),
         _t(ev, NS.SKOS_PREF_LABEL, lbl_en, "literal", "en"),
     ]
     if place_col:
-        entries.append(_t(ev, NS.CRM + "P7_took_place_at", F.col(place_col + "_preferred")))
+        entries.append(_t(ev, NS.CRM + "P7_took_place_at", place_col + "_preferred"))
     if date_col:
-        ts = F.concat(F.lit(TIMES_PREFIX + prefix), local_id)
-        date_lit = date_cmp_str(F.col(date_col), F.col(date_col + "_str"))
-        dt = F.when(F.col(date_col).isNotNull(), F.lit(NS.XSD + "date"))
-        has_date = date_lit.isNotNull()
+        ts = f"concat({lit(TIMES_PREFIX + prefix)}, {_LOCAL_ID})"
+        date_lit = date_cmp_str(date_col, date_col + "_str")
+        dt = f"CASE WHEN {date_col} IS NOT NULL THEN {lit(NS.XSD + 'date')} END"
+        has_date = f"isnotnull({date_lit})"
         entries += [
-            _t(ev, NS.CRM + "P4_has_time-span", F.when(has_date, ts)),
+            _t(ev, NS.CRM + "P4_has_time-span", f"CASE WHEN {has_date} THEN {ts} END"),
             _t(ts, NS.CRM + "P82a_begin_of_the_begin", date_lit, "literal", None, dt),
             _t(ts, NS.CRM + "P82b_end_of_the_end", date_lit, "literal", None, dt),
             _t(ts, NS.SKOS_PREF_LABEL, date_lit, "literal"),
-            _t(ts, NS.RDF_TYPE, F.when(has_date, F.lit(NS.CRM + "E52_Time-Span"))),
+            _t(ts, NS.RDF_TYPE, f"CASE WHEN {has_date} THEN {lit(NS.CRM + 'E52_Time-Span')} END"),
         ]
-    return base, ev, entries
+    return ev, entries
+
+
+def _any_not_null(*cols: str) -> str:
+    return " OR ".join(f"{c} IS NOT NULL" for c in cols)
 
 
 def generate_persons(
@@ -104,175 +114,128 @@ def generate_persons(
     """-> {persons, promotions, joinings, births, deaths, disappearances,
     woundings, documents_links} triples DataFrames."""
     # J10: skip casualties already linked to a person
-    linked = person_links.select(F.col("subj").alias("record_uri"))
-    base = records.join(linked, "record_uri", "left_anti")
-
-    local_id = F.regexp_extract("record_uri", r"/(p[^/]+)$", 1)
-    base = base.withColumn("person_uri", F.concat(F.lit(PERSON_URI_PREFIX), local_id))
-    # person_name = '{given} {family}' (src/person_generator.py:188)
-    base = base.withColumn(
-        "person_name", F.concat_ws(" ", F.col("given_names"), F.col("family_name"))
+    linked = person_links.selectExpr("subj AS record_uri")
+    base = records.join(linked, "record_uri", "left_anti").selectExpr(
+        "*",
+        f"concat({lit(PERSON_URI_PREFIX)}, {_LOCAL_ID}) AS person_uri",
+        # person_name = '{given} {family}' (src/person_generator.py:188)
+        "concat_ws(' ', given_names, family_name) AS person_name",
     )
 
     # preferred municipality per place column (broadcast joins)
-    mun_pref = munics_dim.select("mun_uri", "preferred_municipality")
     for col in [
         "municipality_of_birth", "municipality_of_death",
         "municipality_of_wounding", "municipality_of_going_mia",
     ]:
-        base = base.join(
-            F.broadcast(
-                mun_pref.withColumnRenamed("mun_uri", col)
-                .withColumnRenamed("preferred_municipality", col + "_preferred")
-            ),
-            col,
-            "left",
-        )
+        pref = munics_dim.selectExpr(f"mun_uri AS {col}", f"preferred_municipality AS {col}_preferred")
+        base = base.join(F.broadcast(pref), col, "left")
 
     # link tables (aggregated per record)
-    occs = occupation_links.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("occ_uris"))
-    ranks = rank_links.select(F.col("subj"), F.col("obj").alias("rank_uri_linked"))
-    units = unit_links.groupBy("subj").agg(F.sort_array(F.collect_set("obj")).alias("unit_uris"))
+    occs = occupation_links.groupBy(F.expr("subj AS record_uri")).agg(
+        F.expr("sort_array(collect_set(obj)) AS occ_uris")
+    )
+    ranks = rank_links.selectExpr("subj AS record_uri", "obj AS rank_uri_linked")
+    units = unit_links.groupBy(F.expr("subj AS record_uri")).agg(
+        F.expr("sort_array(collect_set(obj)) AS unit_uris")
+    )
     base = (
-        base.join(occs.withColumnRenamed("subj", "record_uri"), "record_uri", "left")
-        .join(ranks.withColumnRenamed("subj", "record_uri"), "record_uri", "left")
-        .join(units.withColumnRenamed("subj", "record_uri"), "record_uri", "left")
+        base.join(occs, "record_uri", "left")
+        .join(ranks, "record_uri", "left")
+        .join(units, "record_uri", "left")
     )
     # fi/en rank labels for the promotion label (src/person_generator.py:141-146)
-    rk = rank_labels_dim.filter(F.col("is_pref")).groupBy("rank_uri").pivot(
-        "lang", ["fi", "en"]
-    ).agg(F.min("label"))
-    base = base.join(
-        F.broadcast(
-            rk.select(
-                F.col("rank_uri").alias("rank_uri_linked"),
-                F.col("fi").alias("rank_label_fi"),
-                F.col("en").alias("rank_label_en"),
-            )
-        ),
-        "rank_uri_linked",
-        "left",
-    ).cache()
-
-    p = F.col("person_uri")
-    name = F.col("person_name")
-
-    # --- persons (G1)
-    person_entries = [
-        _t(p, NS.RDF_TYPE, F.lit(NS.warsa("Person"))),
-        _t(p, NS.FOAF + "familyName", F.col("family_name"), "literal"),
-        _t(p, NS.FOAF + "firstName", F.col("given_names"), "literal"),
-        _t(p, NS.FOAF + "givenName", F.col("given_names"), "literal"),
-        _t(p, NS.SKOS_PREF_LABEL, name, "literal"),
-        _t(p, NS.DCT_SOURCE, F.lit(NS.NARC_SOURCE)),
-        _t(p, NS.CRM + "P70i_is_documented_in", F.col("record_uri")),
-    ]
-    persons = _finalize(base, person_entries, "persons")
-    occ_triples = (
-        base.select(p.alias("subj"), F.explode_outer("occ_uris").alias("obj"))
-        .filter(F.col("obj").isNotNull())
-        .select(
-            "subj", F.lit(NS.BIOC + "has_occupation").alias("pred"), "obj",
-            F.lit("uri").alias("obj_type"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit("persons").alias("graph_kind"),
-        )
+    rk = rank_labels_dim.where("is_pref").groupBy(F.expr("rank_uri AS rank_uri_linked")).agg(
+        F.expr("min(CASE WHEN lang = 'fi' THEN label END) AS rank_label_fi"),
+        F.expr("min(CASE WHEN lang = 'en' THEN label END) AS rank_label_en"),
     )
-    persons = persons.unionByName(occ_triples).dropDuplicates(["subj", "pred", "obj"])
+    base = base.join(F.broadcast(rk), "rank_uri_linked", "left").cache()
+
+    p = "person_uri"
+    name = "person_name"
+
+    # --- persons (G1), with one has_occupation triple per linked occupation
+    person_entries = [
+        _t(p, NS.RDF_TYPE, lit(NS.warsa("Person"))),
+        _t(p, NS.FOAF + "familyName", "family_name", "literal"),
+        _t(p, NS.FOAF + "firstName", "given_names", "literal"),
+        _t(p, NS.FOAF + "givenName", "given_names", "literal"),
+        _t(p, NS.SKOS_PREF_LABEL, name, "literal"),
+        _t(p, NS.DCT_SOURCE, lit(NS.NARC_SOURCE)),
+        _t(p, NS.CRM + "P70i_is_documented_in", "record_uri"),
+    ]
+    occ_entries = f"transform(coalesce(occ_uris, array()), o -> {_t(p, NS.BIOC + 'has_occupation', 'o')})"
+    persons = _finalize(base, person_entries, "persons", occ_entries)
 
     # --- documents_links (G9)
-    documents_links = base.select(
-        F.col("record_uri").alias("subj"),
-        F.lit(NS.CRM + "P70_documents").alias("pred"),
-        p.alias("obj"),
-        F.lit("uri").alias("obj_type"),
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("datatype"),
-        F.lit("documents_links").alias("graph_kind"),
+    documents_links = base.selectExpr(
+        *triple_exprs("record_uri", NS.CRM + "P70_documents", p, "documents_links")
     )
 
     # --- births / deaths (unguarded, G3/G4)
-    _, _, ent = _event_entries(
-        base, NS.warsa("Birth"), "birth_", NS.CRM + "P98_brought_into_life",
+    _, ent = _event_entries(
+        NS.warsa("Birth"), "birth_", NS.CRM + "P98_brought_into_life",
         "date_of_birth", "municipality_of_birth",
-        F.format_string("%s syntyi", name), F.format_string("%s was born", name),
+        f"format_string('%s syntyi', {name})", f"format_string('%s was born', {name})",
     )
     births = _finalize(base, ent, "births")
 
-    _, _, ent = _event_entries(
-        base, NS.warsa("Death"), "death_", NS.CRM + "P100_was_death_of",
+    _, ent = _event_entries(
+        NS.warsa("Death"), "death_", NS.CRM + "P100_was_death_of",
         "date_of_death", "municipality_of_death",
-        F.format_string("%s kuoli", name), F.format_string("%s died", name),
+        f"format_string('%s kuoli', {name})", f"format_string('%s died', {name})",
     )
     deaths = _finalize(base, ent, "deaths")
 
     # --- disappearances (guarded, G5)
-    dis_base = base.filter(
-        F.col("date_of_going_mia").isNotNull()
-        | F.col("date_of_going_mia_str").isNotNull()
-        | F.col("municipality_of_going_mia").isNotNull()
-        | F.col("place_of_going_mia_literal").isNotNull()
-    )
-    _, ev, ent = _event_entries(
-        dis_base, NS.warsa("Disappearing"), "disappear_cas_", NS.CRM + "P11_had_participant",
+    dis_base = base.where(_any_not_null(
+        "date_of_going_mia", "date_of_going_mia_str", "municipality_of_going_mia",
+        "place_of_going_mia_literal",
+    ))
+    ev, ent = _event_entries(
+        NS.warsa("Disappearing"), "disappear_cas_", NS.CRM + "P11_had_participant",
         "date_of_going_mia", "municipality_of_going_mia",
-        F.format_string("%s katosi", name), F.format_string("%s went missing in action", name),
+        f"format_string('%s katosi', {name})",
+        f"format_string('%s went missing in action', {name})",
     )
-    ent.append(_t(ev, NS.warsa("place_string"), F.col("place_of_going_mia_literal"), "literal"))
+    ent.append(_t(ev, NS.warsa("place_string"), "place_of_going_mia_literal", "literal"))
     disappearances = _finalize(dis_base, ent, "disappearances")
 
     # --- woundings (guarded, G6)
-    wnd_base = base.filter(
-        F.col("date_of_wounding").isNotNull()
-        | F.col("date_of_wounding_str").isNotNull()
-        | F.col("municipality_of_wounding").isNotNull()
-        | F.col("place_of_wounding").isNotNull()
-    )
-    _, ev, ent = _event_entries(
-        wnd_base, NS.warsa("Wounding"), "wound_cas_", NS.CRM + "P11_had_participant",
+    wnd_base = base.where(_any_not_null(
+        "date_of_wounding", "date_of_wounding_str", "municipality_of_wounding", "place_of_wounding",
+    ))
+    ev, ent = _event_entries(
+        NS.warsa("Wounding"), "wound_cas_", NS.CRM + "P11_had_participant",
         "date_of_wounding", "municipality_of_wounding",
-        F.format_string("%s haavoittui", name), F.format_string("%s was wounded", name),
+        f"format_string('%s haavoittui', {name})", f"format_string('%s was wounded', {name})",
     )
-    ent.append(_t(ev, NS.warsa("place_string"), F.col("place_of_wounding"), "literal"))
+    ent.append(_t(ev, NS.warsa("place_string"), "place_of_wounding", "literal"))
     woundings = _finalize(wnd_base, ent, "woundings")
 
     # --- promotions (guarded on rank link, G7)
-    pro_base = base.filter(F.col("rank_uri_linked").isNotNull())
-    rank_fi = F.coalesce("rank_label_fi", "rank_literal")
-    rank_en = F.coalesce("rank_label_en", rank_fi)
-    _, ev, ent = _event_entries(
-        pro_base, NS.warsa("Promotion"), "promotion_cas_", NS.CRM + "P11_had_participant",
+    pro_base = base.where("rank_uri_linked IS NOT NULL")
+    rank_fi = "coalesce(rank_label_fi, rank_literal)"
+    rank_en = f"coalesce(rank_label_en, {rank_fi})"
+    ev, ent = _event_entries(
+        NS.warsa("Promotion"), "promotion_cas_", NS.CRM + "P11_had_participant",
         None, None,
-        F.format_string("%s ylennettiin sotilasarvoon %s", name, F.lower(rank_fi)),
-        F.format_string("%s was promoted to %s", name, F.lower(rank_en)),
+        f"format_string('%s ylennettiin sotilasarvoon %s', {name}, lower({rank_fi}))",
+        f"format_string('%s was promoted to %s', {name}, lower({rank_en}))",
     )
-    ent.append(_t(ev, NS.HAS_RANK_PROP, F.col("rank_uri_linked")))
+    ent.append(_t(ev, NS.HAS_RANK_PROP, "rank_uri_linked"))
     promotions = _finalize(pro_base, ent, "promotions")
 
-    # --- joinings (guarded on unit links; ONE event URI per casualty, G8)
-    join_base = base.filter(F.size(F.coalesce("unit_uris", F.array())) > 0)
-    _, ev, ent = _event_entries(
-        join_base, NS.warsa("PersonJoining"), "joining_cas_", NS.CRM + "P143_joined",
+    # --- joinings (guarded on unit links; ONE event URI per casualty carrying
+    # one P144_joined_with triple per unit, G8)
+    join_base = base.where("size(coalesce(unit_uris, array())) > 0")
+    ev, ent = _event_entries(
+        NS.warsa("PersonJoining"), "joining_cas_", NS.CRM + "P143_joined",
         None, None,
-        F.format_string("%s liittyi joukko-osastoon %s", name, F.col("unit_literal")),
-        F.format_string("%s joined %s", name, F.col("unit_literal")),
+        f"format_string('%s liittyi joukko-osastoon %s', {name}, unit_literal)",
+        f"format_string('%s joined %s', {name}, unit_literal)",
     )
-    joinings = _finalize(join_base, ent, "joinings")
-    join_units = (
-        join_base.select(
-            F.concat(F.lit(EVENT_PREFIX + "joining_cas_"), local_id).alias("subj"),
-            F.explode("unit_uris").alias("obj"),
-        )
-        .select(
-            "subj", F.lit(NS.CRM + "P144_joined_with").alias("pred"), "obj",
-            F.lit("uri").alias("obj_type"),
-            F.lit(None).cast("string").alias("lang"),
-            F.lit(None).cast("string").alias("datatype"),
-            F.lit("joinings").alias("graph_kind"),
-        )
-    )
-    joinings = joinings.unionByName(join_units).dropDuplicates(["subj", "pred", "obj"])
+    unit_entries = f"transform(unit_uris, u -> {_t(ev, NS.CRM + 'P144_joined_with', 'u')})"
+    joinings = _finalize(join_base, ent, "joinings", unit_entries)
 
     return {
         "persons": persons,

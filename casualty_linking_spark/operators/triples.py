@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, functions as F
 from .. import namespaces as NS
 from ..dims import GRAVEYARD_MAPPING, URI_MAPPINGS
 from ..schema import TRIPLE_COLS
+from ..sqltext import case_map, lit
 
 XSD_DATE = NS.XSD + "date"
 XSD_INTEGER = NS.XSD + "integer"
@@ -58,101 +59,73 @@ PROPERTY_SPEC = [
 
 DEATH_RECORD_TYPE = NS.warsa("DeathRecord")
 
-_TRIPLE_STRUCT_FIELDS = "pred string, obj string, obj_type string, lang string, datatype string"
-
-
-def _entry(pred: str, obj: F.Column, obj_type: str, datatype: F.Column | None = None):
-    dt = datatype if datatype is not None else F.lit(None).cast("string")
-    return F.when(
-        obj.isNotNull(),
-        F.struct(
-            F.lit(pred).alias("pred"),
-            obj.alias("obj"),
-            F.lit(obj_type).alias("obj_type"),
-            F.lit(None).cast("string").alias("lang"),
-            dt.alias("datatype"),
-        ),
+def _entry(pred: str, obj: str, obj_type: str, datatype: str = "CAST(NULL AS STRING)") -> str:
+    """One unpivot entry (Spark SQL text): NULL when ``obj`` is null."""
+    return (
+        f"CASE WHEN isnotnull({obj}) THEN struct({lit(pred)} AS pred, {obj} AS obj, "
+        f"{lit(obj_type)} AS obj_type, CAST(NULL AS STRING) AS lang, {datatype} AS datatype) END"
     )
 
 
-# Column trees for the unpivot are pure functions of column names and module
-# constants; build them once per process (rebuilding cost ~2-3 s of py4j
-# driver time per call — records_to_triples is embedded in the flagship and
-# ~10 contract queries). Lazy: Column construction needs a live JVM.
-_GY_MAPPED: F.Column | None = None
-_ENTRIES_EXPLODED: F.Column | None = None
-
-
-def _gy_mapped_col() -> F.Column:
-    mun_code = F.regexp_extract("municipality_of_burial", r"/k([^/]*)$", 1)
-    gy_raw = F.when(
-        F.col("municipality_of_burial").isNotNull() & F.col("graveyard_number").isNotNull(),
-        F.concat(F.lit(NS.CEMETERIES + "h"), mun_code, F.lit("_"), F.col("graveyard_number")),
-    )
-    gy_mapped = gy_raw
-    for bad, good in GRAVEYARD_MAPPING:
-        gy_mapped = F.when(gy_mapped == bad, F.lit(good)).otherwise(gy_mapped)
-    return gy_mapped
-
-
-def _entries_exploded_col() -> F.Column:
+def _entries() -> str:
+    """The unpivot of one silver record as an array of (pred, obj, obj_type,
+    lang, datatype) structs, nulls dropped — one expression, so the whole
+    unpivot crosses to the JVM in one call."""
     entries = []
     for col, pred, kind in PROPERTY_SPEC:
-        c = F.col(col)
         if kind == "uri":
-            entries.append(_entry(pred, c, "uri"))
+            entries.append(_entry(pred, col, "uri"))
         elif kind == "literal":
-            entries.append(_entry(pred, F.nullif(c, F.lit("")), "literal"))
+            entries.append(_entry(pred, f"nullif({col}, '')", "literal"))
         elif kind == "int":
-            entries.append(_entry(pred, c.cast("string"), "literal", F.lit(XSD_INTEGER)))
+            entries.append(_entry(pred, f"CAST({col} AS STRING)", "literal", lit(XSD_INTEGER)))
         elif kind == "date":
-            obj = F.coalesce(F.date_format(c, "yyyy-MM-dd"), F.col(col + "_str"))
-            dt = F.when(c.isNotNull(), F.lit(XSD_DATE))
+            obj = f"coalesce(date_format({col}, 'yyyy-MM-dd'), {col}_str)"
+            dt = f"CASE WHEN {col} IS NOT NULL THEN {lit(XSD_DATE)} END"
             entries.append(_entry(pred, obj, "literal", dt))
 
     # graveyard_number kept only when the URI was not resolved against the
     # ontology (reference removes it otherwise, src/csv_to_rdf.py:119).
-    entries.append(
-        _entry(
-            NS.cas("graveyard_number"),
-            F.when(~F.col("gy_exists"), F.col("graveyard_number")),
-            "literal",
-        )
-    )
+    entries.append(_entry(
+        NS.cas("graveyard_number"),
+        "CASE WHEN NOT coalesce(gy_exists, FALSE) THEN graveyard_number END",
+        "literal",
+    ))
     # buried_in only for existing cemetery URIs with numeric graveyard number
     # (src/csv_to_rdf.py:116-117).
-    entries.append(
-        _entry(
-            NS.warsa("buried_in"),
-            F.when(F.col("gy_exists") & F.col("graveyard_number").rlike("^[0-9]+$"), F.col("gy_uri")),
-            "uri",
-        )
-    )
+    entries.append(_entry(
+        NS.warsa("buried_in"),
+        "CASE WHEN coalesce(gy_exists, FALSE) AND graveyard_number RLIKE '^[0-9]+$' THEN gy_uri END",
+        "uri",
+    ))
     # rdf:type DeathRecord (src/csv_to_rdf.py:82)
-    entries.append(_entry(NS.RDF_TYPE, F.lit(DEATH_RECORD_TYPE), "uri"))
-    return F.explode(F.array_compact(F.array(*entries))).alias("t")
+    entries.append(_entry(NS.RDF_TYPE, lit(DEATH_RECORD_TYPE), "uri"))
+    return f"array_compact(array({', '.join(entries)}))"
+
+
+# graveyard URI h{code}_{n} minted from the burial municipality, with the two
+# overrides of GRAVEYARD_MAPPING applied
+_GY_URI = case_map(
+    "CASE WHEN municipality_of_burial IS NOT NULL AND graveyard_number IS NOT NULL THEN "
+    f"concat({lit(NS.CEMETERIES + 'h')}, regexp_extract(municipality_of_burial, '/k([^/]*)$', 1), "
+    "'_', graveyard_number) END",
+    GRAVEYARD_MAPPING,
+)
+_ENTRIES = _entries()
 
 
 def records_to_triples(records: DataFrame, cemeteries_dim: DataFrame, graph_kind: str = "casualties") -> DataFrame:
     """Wide silver record -> long (subj, pred, obj) rows (P1 unpivot) plus the
     graveyard URI construction/validation (P11, src/csv_to_rdf.py:94-121)."""
-    global _GY_MAPPED, _ENTRIES_EXPLODED
-    if _GY_MAPPED is None:
-        _GY_MAPPED = _gy_mapped_col()
-        _ENTRIES_EXPLODED = _entries_exploded_col()
-
     # graveyard handling: mint h{code}_{n} URI, apply the two overrides,
-    # existence-check against the cemeteries dimension (broadcast join).
-    recs = records.withColumn("gy_uri", _GY_MAPPED).join(
-        F.broadcast(cemeteries_dim.withColumnRenamed("cem_uri", "gy_uri").withColumn("gy_exists", F.lit(True))),
-        "gy_uri",
-        "left",
-    ).withColumn("gy_exists", F.coalesce("gy_exists", F.lit(False)))
-
-    exploded = recs.select(F.col("record_uri").alias("subj"), _ENTRIES_EXPLODED)
-    return exploded.select(
-        "subj", "t.pred", "t.obj", "t.obj_type", "t.lang", "t.datatype",
-        F.lit(graph_kind).alias("graph_kind"),
+    # existence-check against the cemeteries dimension (broadcast join;
+    # gy_exists is NULL for a URI the dimension lacks).
+    cems = cemeteries_dim.selectExpr("cem_uri AS gy_uri", "TRUE AS gy_exists")
+    recs = records.selectExpr("*", f"{_GY_URI} AS gy_uri").join(F.broadcast(cems), "gy_uri", "left")
+    return recs.selectExpr(
+        "record_uri AS subj",
+        f"inline({_ENTRIES})",
+        f"{lit(graph_kind)} AS graph_kind",
     )
 
 

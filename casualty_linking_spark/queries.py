@@ -231,13 +231,12 @@ SELECT CAST(pid AS VARCHAR) AS person_id,
   {raw} AS value
 FROM records"""
 
-    import datetime
-    today = datetime.date.today().isoformat()
+    before_death = REC.DEATH_DATE_BEFORE.isoformat()
     blocks = [
         err_block("SAIKA", _BIRTH_DATE, _BIRTH_STR, "1860-01-01", "1935-01-01"),
         err_block("HAAVAIKA", _WOUND_DATE, _WOUND_STR, "1939-11-28", "1945-04-25"),
         err_block("KATOAIKA", _MIA_DATE, _MIA_STR, "1939-11-28", "1945-04-25"),
-        err_block("KUOLINAIKA", _DEATH_DATE, _DEATH_STR, "1939-11-30", today),
+        err_block("KUOLINAIKA", _DEATH_DATE, _DEATH_STR, "1939-11-30", before_death),
     ]
     unions = " UNION ALL ".join(f"({b})" for b in blocks)
     return synth.oracle_prelude() + f"SELECT * FROM ({unions}) WHERE error IS NOT NULL"

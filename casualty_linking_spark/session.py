@@ -22,10 +22,11 @@ def _system_memory_gib() -> float:
 
 
 # The aggressive defaults (64g heap, tmpfs shuffle dir) assume a host with
-# RAM to spare for both — like this ~125 GiB sandbox. On a smaller machine
-# the tmpfs spill would compete with the heap for the same physical pages
-# and can OOM the host instead of spilling to disk, so below this threshold
-# the conservative 16g/disk defaults apply. Env vars always override.
+# RAM to spare for both (~125 GiB). On a smaller machine the tmpfs spill
+# would compete with the heap for the same physical pages and can OOM the
+# host instead of spilling to disk, so below this threshold the heap is
+# sized from the host (see _default_driver_memory) and shuffle goes to disk.
+# Env vars always override.
 _BIG_HOST_GIB = 96.0
 
 
@@ -39,7 +40,15 @@ def _default_local_dir() -> str:
 
 
 def _default_driver_memory() -> str:
-    return "64g" if _system_memory_gib() >= _BIG_HOST_GIB else "16g"
+    """64g on a big host; otherwise half of physical memory, at most 16g —
+    the other half stays free for the Python workers, Arrow buffers and
+    off-heap memory the JVM itself needs. 16g when memory is undetectable."""
+    gib = _system_memory_gib()
+    if gib >= _BIG_HOST_GIB:
+        return "64g"
+    if gib <= 0:
+        return "16g"
+    return f"{max(1, min(16, int(gib / 2)))}g"
 
 
 def get_spark(
@@ -82,8 +91,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
-        # Size the single local JVM like the sum of a node's executors: the
-        # sandbox has ~125 GiB; a 16g heap made the 148M-triple dedup shuffle
+        # Size the single local JVM like the sum of a node's executors: on a
+        # ~125 GiB host a 16g heap made the 148M-triple dedup shuffle
         # spill + GC-thrash, which showed up as a non-scaling time component
         # (measured: 8->32 efficiency 0.48 at 30M turns with 16g). Gated on
         # detected host memory — see _default_driver_memory.

@@ -78,31 +78,17 @@ def candidate_frame(spark, sf_dir: str) -> pd.DataFrame:
     feats = LP.casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
     actors = synth.actors_from_sf(spark, sf_dir)
 
-    left = feats.withColumn(
-        "bk",
-        F.explode(
-            LP._block_keys(
-                F.col("family"), F.col("death_iso"), F.col("birth_iso"), F.col("given")
-            )
-        ),
+    left = feats.selectExpr(
+        "*", f"explode({LP._block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
     )
     right = actors.select(
         "actor_uri", F.col("given").alias("a_given"), F.col("family").alias("a_family"),
         F.col("birth_iso").alias("a_birth"), F.col("death_iso").alias("a_death"),
         F.col("rank_uri").alias("a_rank"), F.col("rank_level").alias("a_rank_level"),
         F.col("unit_uri").alias("a_unit"), F.col("birth_place").alias("a_place"),
-    ).withColumn(
-        "bk",
-        F.explode(
-            LP._block_keys(
-                F.col("a_family"),
-                F.col("a_death"),
-                F.col("a_birth"),
-                F.col("a_given"),
-                name_only_always=True,
-            )
-        ),
     )
+    a_keys = LP._block_keys("a_family", "a_death", "a_birth", "a_given", name_only_always=True)
+    right = right.selectExpr("*", f"explode({a_keys}) AS bk")
     pairs = left.join(right, "bk").dropDuplicates(["record_uri", "actor_uri"])
     pid = F.regexp_extract("record_uri", r"p(\d+)$", 1).cast("bigint")
     out = LP.score_pairs(pairs).withColumn("pid", pid).withColumn(

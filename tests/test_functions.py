@@ -6,9 +6,8 @@ import random
 
 import duckdb
 import pytest
-from pyspark.sql import Row, functions as F
 
-from casualty_linking_spark.functions.dates import convert_dates, validate_dates
+from casualty_linking_spark.functions.dates import convert_dates, date_parts, validate_dates
 from casualty_linking_spark.functions.similarity import (
     jaro_winkler_py, levenshtein_ratio, ascii_fold, duckdb_ascii_fold,
     duckdb_levenshtein_ratio,
@@ -35,8 +34,9 @@ DATE_CASES = [
 
 def test_convert_dates(spark):
     df = spark.createDataFrame([(c[0],) for c in DATE_CASES], "raw string")
-    d, s = convert_dates(F.col("raw"))
-    rows = df.select(F.col("raw"), d.alias("d"), s.alias("s")).collect()
+    df = df.selectExpr("raw", *date_parts("raw"))
+    d, s = convert_dates("raw")
+    rows = df.selectExpr("raw", f"{d} AS d", f"{s} AS s").collect()
     for (raw, exp_d, exp_s), row in zip(DATE_CASES, rows):
         assert row["d"] == exp_d, (raw, row["d"], exp_d)
         assert row["s"] == exp_s, (raw, row["s"], exp_s)
@@ -53,10 +53,10 @@ def test_validate_dates(spark):
             ("xx.06.1941", None),  # xx-prefixed unresolved: silent
         ],
         "raw string, expected string",
-    )
-    d, s = convert_dates(F.col("raw"))
+    ).selectExpr("*", *date_parts("raw"))
+    d, s = convert_dates("raw")
     err = validate_dates(d, s)
-    for row in df.select("raw", "expected", err.alias("err")).collect():
+    for row in df.selectExpr("raw", "expected", f"{err} AS err").collect():
         assert row["err"] == row["expected"], row
 
 
@@ -78,7 +78,7 @@ def test_levenshtein_ratio_matches_duckdb(spark):
     con = duckdb.connect()
     pairs = [("JR 8", "Jalkaväkirykmentti 8"), ("KTR 9", "KTR 2"), ("työmies", "tyomies")]
     df = spark.createDataFrame(pairs, "a string, b string")
-    got = df.select(levenshtein_ratio(ascii_fold(F.col("a")), ascii_fold(F.col("b"))).alias("r")).collect()
+    got = df.selectExpr(f"{levenshtein_ratio(ascii_fold('a'), ascii_fold('b'))} AS r").collect()
     for (a, b), row in zip(pairs, got):
         exp = con.execute(
             "select " + duckdb_levenshtein_ratio(
@@ -93,7 +93,7 @@ def test_enum_default(spark):
     from casualty_linking_spark.operators.records import _enum_col
 
     df = spark.createDataFrame([("M",), ("F",), ("Q",), (None,)], "spuoli string")
-    rows = df.select(_enum_col(F.col("spuoli"), "gender").alias("u")).collect()
+    rows = df.selectExpr(f"{_enum_col('spuoli', 'gender')} AS u").collect()
     assert rows[0]["u"].endswith("Mies")
     assert rows[1]["u"].endswith("Nainen")
     assert rows[2]["u"].endswith("Tuntematon")
@@ -117,7 +117,7 @@ def test_phonetic_key_matches_duckdb_and_tolerates_vowel_typos(spark):
         "Hämäläinen", "O'Brien", "Karjalainen",
     ]
     df = spark.createDataFrame([(n,) for n in names], "name string")
-    got = {r.name: r.k for r in df.select("name", phonetic_key(F.col("name")).alias("k")).collect()}
+    got = {r.name: r.k for r in df.selectExpr("name", f"{phonetic_key('name')} AS k").collect()}
 
     con = duckdb.connect()
     for n in names:

@@ -2,6 +2,7 @@
 broadcast joins for dimensions, pushed parquet filters, no cartesian
 products in linking, whole-stage codegen in the extraction hot path."""
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -438,3 +439,38 @@ def test_occupation_scorer_single_python_eval(spark):
     )
     plan = _plan(link_occupations(rec, dims.dim_occupations(spark)))
     assert plan.count("ArrowEvalPython") == 1, plan
+
+
+def test_person_scorer_single_python_eval(spark):
+    """Both name Jaro-Winkler scores of a person candidate pair come from
+    ONE struct-returning pandas UDF, and the score filter cannot clone it:
+    a single *EvalPython node in the scored-pairs plan (one Arrow round trip
+    per batch instead of two), with each score equal to the scalar
+    reference."""
+    from casualty_linking_spark.functions.similarity import jaro_winkler_py
+    from casualty_linking_spark.operators.link_persons import score_pairs
+
+    pairs = spark.createDataFrame(
+        [
+            ("Matti", "Virtanen", "Matti", "Virtanen"),
+            ("Mätti", "Korhonen", "Matti", "Korhonén"),
+            (None, "Laine", "Juho", None),
+        ],
+        "given string, family string, a_given string, a_family string",
+    ).selectExpr(
+        "*", "'1900-01-01' AS birth_iso", "'1941-07-01' AS death_iso",
+        "array('r') AS `rank`", "3 AS rank_level", "array('m') AS birth_place",
+        "array('u') AS units", "'1900-01-01' AS a_birth", "'1941-07-01' AS a_death",
+        "'r' AS a_rank", "3 AS a_rank_level", "'m' AS a_place", "'u' AS a_unit",
+    )
+    scored = score_pairs(pairs).where("score >= 0.0")
+    plan = _plan(scored)
+    assert plan.count("EvalPython") == 1, plan
+
+    def jw(a, b):
+        a, b = (a or "").lower(), (b or "").lower()
+        return jaro_winkler_py(a.encode("utf-8").decode("latin-1"), b.encode("utf-8").decode("latin-1"))
+
+    for r in scored.collect():
+        assert r["jw_given"] == pytest.approx(jw(r["given"], r["a_given"]), abs=1e-12)
+        assert r["jw_family"] == pytest.approx(jw(r["family"], r["a_family"]), abs=1e-12)

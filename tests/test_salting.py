@@ -38,7 +38,6 @@ def test_salted_linkage_matches_unsalted(spark):
         _block_keys,
         oversized_block_keys,
     )
-    from pyspark.sql import functions as F
 
     capped_hi = {
         (r.subj, r.obj)
@@ -46,19 +45,13 @@ def test_salted_linkage_matches_unsalted(spark):
     }
     assert capped_hi == plain
 
-    left = feats.withColumn(
-        "bk",
-        F.explode(
-            _block_keys(F.col("family"), F.col("death_iso"), F.col("birth_iso"), F.col("given"))
-        ),
+    left = feats.selectExpr(
+        "*", f"explode({_block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
     )
-    right = actors.withColumn(
-        "bk",
-        F.explode(
-            _block_keys(
-                F.col("family"), F.col("death_iso"), F.col("birth_iso"), F.col("given"),
-                name_only_always=True,
-            )
+    right = actors.selectExpr(
+        "*",
+        "explode({}) AS bk".format(
+            _block_keys("family", "death_iso", "birth_iso", "given", name_only_always=True)
         ),
     )
     over = oversized_block_keys(left, right, 50).collect()
@@ -82,19 +75,14 @@ def test_block_keys_null_strict(spark):
     the DuckDB oracle's NULL-equality semantics. concat_ws would silently
     drop the null component and let two null-named rows block on the year
     alone (latent engine/oracle divergence this pins against)."""
-    from pyspark.sql import functions as F
-
     from casualty_linking_spark.operators.link_persons import _block_keys
 
     df = spark.createDataFrame(
         [(None, "1944-01-02", "1900-03-04", "Matti"), ("Virtanen", "1944-01-02", None, None)],
         "family string, death string, birth string, given string",
     )
-    keys = df.select(
-        _block_keys(
-            F.col("family"), F.col("death"), F.col("birth"), F.col("given"),
-            name_only_always=True,
-        ).alias("k")
+    keys = df.selectExpr(
+        _block_keys("family", "death", "birth", "given", name_only_always=True) + " AS k"
     ).collect()
     null_family, null_given = keys[0]["k"], keys[1]["k"]
     assert all(k is None for k in null_family), null_family

@@ -17,6 +17,16 @@ def test_small_host_gets_conservative_defaults(monkeypatch):
     assert "/dev/shm" not in session._default_local_dir()
 
 
+def test_host_smaller_than_default_heap_gets_half_its_memory(monkeypatch):
+    """A 15 GiB host cannot hold a 16g heap plus its Python workers: the
+    kernel OOM-kills the JVM. The heap must leave half the RAM free."""
+    monkeypatch.setattr(session, "_system_memory_gib", lambda: 15.0)
+    assert session._default_driver_memory() == "7g"
+    assert "/dev/shm" not in session._default_local_dir()
+    monkeypatch.setattr(session, "_system_memory_gib", lambda: 1.5)
+    assert session._default_driver_memory() == "1g"
+
+
 def test_undetectable_memory_is_conservative(monkeypatch):
     monkeypatch.setattr(session, "_system_memory_gib", lambda: 0.0)
     assert session._default_driver_memory() == "16g"
