@@ -81,18 +81,6 @@ def exact_duplicates(documents: DataFrame) -> DataFrame:
     ).select("doc_id", "text_hash", "canonical_id", "group_size")
 
 
-def minhash_signature(text: Column, n_hashes: int = N_HASHES) -> Column:
-    """Array of n minhashes: min over shingles of md5(seed || ':' || shingle).
-    String-min over hex digests — portable across engines."""
-    sh = shingles_col(text)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(n_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(sh, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
-        ),
-    )
-
-
 def _let_bound(value: Column, body) -> Column:
     """Let-binding for Column expressions: evaluate ``value`` once and feed it
     to ``body`` as a lambda variable. ``transform`` over a one-element array
@@ -190,16 +178,15 @@ def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
     """Candidate near-dup pairs (doc_a < doc_b) sharing at least one band.
 
     The band self-join is forced to a shuffled hash join: both sides then
-    canonicalize to the identical subtree (scan -> shingle explode -> 12-way
-    min agg -> band projection -> Exchange on band key), so exchange reuse
-    (static ReuseExchange, or AQE's runtime stage reuse) computes the
-    expensive signature build ONCE. Left to the planner at toy scale, the
+    canonicalize to the identical subtree (scan -> one signature projection
+    with the let-bound shingle array -> band rows -> Exchange on band key),
+    so exchange reuse (static ReuseExchange, or AQE's runtime stage reuse)
+    computes the signature build ONCE. Left to the planner at toy scale, the
     small side goes under a BroadcastExchange, which is NOT structurally
-    shared with the streamed side — the signature aggregation and the
-    document scan both execute twice (measured: 2 FileScans). The extra
-    shuffle moves only post-agg rows (n_bands per doc), negligible at any
-    scale, and at 100 TB a self-join of the band table would never have
-    been broadcast-able anyway."""
+    shared with the streamed side — the signature projection and the
+    document scan both execute twice. The shuffle moves n_bands rows per
+    document, negligible at any scale, and at 100 TB a self-join of the
+    band table would never have been broadcast-able anyway."""
     return _bands_to_pairs(lsh_bands(documents))
 
 

@@ -56,8 +56,9 @@ def link_occupations(
     # session's shuffle-partition count, so the scoring stage ran as 32
     # near-empty tasks EACH paying a Python-worker dispatch for the pandas
     # UDF (measured ~0.9 s/task of non-CPU wait). One task holds the whole
-    # vocabulary at any corpus scale — vocabulary size is bounded by the
-    # ontology, not the data.
+    # vocabulary. That vocabulary is bounded by the distinct dirty literals
+    # in the data, not by the ontology, so the task grows with the corpus's
+    # dirt; sizing it from the data is ROADMAP item 3.
     lits = recs.select("occupation_literal").distinct().coalesce(1)
     if block_first_char:
         cond = F.expr("substring(occupation_literal, 1, 1) = substring(label, 1, 1)")

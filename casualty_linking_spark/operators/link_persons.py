@@ -466,19 +466,22 @@ def _connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFram
     edge set is a union of stars (child, root) with root = the component's
     minimum vertex; the vertex table is recovered as children ∪ roots ∪
     isolated input vertices (a degenerate input edge (v, v) yields a
-    single-vertex component)."""
+    single-vertex component).
+
+    One cut per round: the input edges are cut once (every later plan reads
+    them), each round's edge set is cut once, and the fixed-point test is a
+    single job; the vertex set and the first round's edges are lazy over
+    the input cut."""
     e0 = edges.select("src", "dst").localCheckpoint(eager=True)
     verts = (
         e0.select(F.col("src").alias("vertex"))
         .unionByName(e0.select(F.col("dst").alias("vertex")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     cur = (
         e0.filter(F.col("src") != F.col("dst"))
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     converged = False
     for _ in range(max_iter):
@@ -486,13 +489,17 @@ def _connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFram
             cur.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
         nxt = _small_star(_large_star(sym)).localCheckpoint(eager=True)
-        # fixed point: same undirected edge set (both sides are canonical
-        # (child > root) pairs after small-star, so set equality is exact)
-        if nxt.count() == cur.count() and nxt.exceptAll(cur).count() == 0:
-            cur = nxt
+        # fixed point: same undirected edge set. Both sides are sets, so they
+        # are equal exactly when no (a, b) occurs on one side only.
+        one_sided = (
+            nxt.selectExpr("a", "b", "true AS in_nxt")
+            .join(cur.selectExpr("a", "b", "true AS in_cur"), ["a", "b"], "full_outer")
+            .where("in_nxt IS NULL OR in_cur IS NULL")
+        )
+        cur = nxt
+        if one_sided.isEmpty():
             converged = True
             break
-        cur = nxt
     if not converged:
         raise RuntimeError(
             f"connected_components(star) did not reach a fixed point in "

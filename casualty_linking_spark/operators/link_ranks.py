@@ -21,11 +21,13 @@ from ..sqltext import triple_exprs
 def link_ranks(records: DataFrame, rank_labels: DataFrame) -> DataFrame:
     """-> triples (record_uri, SCHEMA_CAS.rank, rank_uri).
 
-    Resolution happens per DISTINCT literal (the rank vocabulary is a few
-    hundred strings at any corpus size), so the only full-data operation is
-    a broadcast hash join — no shuffle of the record stream at all.
-    coalesce(1) after the vocabulary distinct: same single-task reasoning
-    as the unit/occupation linkers."""
+    Resolution happens per DISTINCT literal, so the only full-data
+    operation is a broadcast hash join — no shuffle of the record stream at
+    all. coalesce(1) after the vocabulary distinct puts the whole vocabulary
+    in one task, as in the unit/occupation linkers. That vocabulary is the
+    distinct dirty literals of the data, not the ontology's labels, so it
+    grows with the corpus's dirt: sizing this path from the data is ROADMAP
+    item 3."""
     recs = records.selectExpr("record_uri", "rank_literal").where("rank_literal IS NOT NULL")
     lits = recs.select("rank_literal").distinct().coalesce(1)
     cands = lits.join(F.broadcast(rank_labels), F.expr("lower(trim(rank_literal)) = lower(label)"))

@@ -101,11 +101,12 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
     # vocabulary is tiny vs the corpus, so the fuzzy pass is O(vocab x labels)
     # and records resolve via a broadcast join (same dataflow shape as the
     # reference's one batched VALUES lookup, src/linker.py:145-147).
-    # coalesce(1) after the distinct: the (code, literal) vocabulary is
-    # bounded by the unit ontology × dirt classes, not the corpus, so the
-    # scoring join + per-pair argmax run as one task instead of a fan of
-    # near-empty shuffle-partition tasks (same reasoning as the occupation
-    # linker's vocabulary coalesce).
+    # coalesce(1) after the distinct: the scoring join + per-pair argmax
+    # run as one task instead of a fan of near-empty shuffle-partition tasks
+    # (as in the occupation linker). The (code, literal) vocabulary is
+    # bounded by the distinct dirty literals in the data, not by the unit
+    # ontology, so that task grows with the corpus's dirt; sizing it from
+    # the data is ROADMAP item 3.
     pairs = (
         recs.where("unit_code IS NOT NULL")
         .select("unit_code", "unit_literal").distinct().coalesce(1)

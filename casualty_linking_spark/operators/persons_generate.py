@@ -3,9 +3,13 @@
 
 For every DeathRecord without a crm:P70_documents link (J10 anti-join,
 src/person_generator.py:214-216) mint actors/person_{id} plus its
-birth/death/joining/promotion/wounding/disappearance events, each a pure
-``select`` + struct-array ``explode`` — one scan over the silver record
-joined with the (broadcast) link tables; no driver loop.
+birth/death/joining/promotion/wounding/disappearance events. All eight
+graphs are ONE projection: every triple entry carries its ``graph_kind`` and
+its graph's guard, and a single ``inline`` over the concatenated entry
+arrays emits them in one scan over the silver record joined with the
+(broadcast) link tables — no cache, no per-graph pass, no driver loop. The
+graph union's (subj, pred, obj) dedup (``triples.union_graphs``) gives the
+output its set semantics.
 
 Event semantics pinned by the reference:
 
@@ -27,39 +31,52 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import namespaces as NS
 from ..functions.dates import date_cmp_str
-from ..sqltext import lit, triple_exprs
+from ..sqltext import lit
 
 PERSON_URI_PREFIX = "http://ldf.fi/warsa/actors/person_"
 EVENT_PREFIX = "http://ldf.fi/warsa/events/"
 TIMES_PREFIX = "http://ldf.fi/warsa/events/times/"
 
-# every triple entry below is Spark SQL text; a graph's whole entry array
-# reaches the JVM as one expression (see sqltext.py)
+# every triple entry below is Spark SQL text; all eight graphs' entries
+# reach the JVM as one expression (see sqltext.py)
 _LOCAL_ID = "regexp_extract(record_uri, '/(p[^/]+)$', 1)"
 
 
 def _t(subj: str, pred: str, obj: str, obj_type: str = "uri", lang: str | None = None,
-       datatype: str | None = None) -> str:
-    """One triple entry: a struct when ``subj`` and ``obj`` (SQL
-    expressions) are both non-null, else NULL. ``pred``, ``obj_type`` and
-    ``lang`` are constants; ``datatype`` is a SQL expression."""
+       datatype: str | None = None) -> tuple[str, str]:
+    """One triple entry as (condition, struct fields): present when ``subj``
+    and ``obj`` (SQL expressions) are both non-null. ``pred``, ``obj_type``
+    and ``lang`` are constants; ``datatype`` is a SQL expression."""
     return (
-        f"CASE WHEN isnotnull({obj}) AND isnotnull({subj}) THEN struct("
+        f"isnotnull({obj}) AND isnotnull({subj})",
         f"{subj} AS subj, {lit(pred)} AS pred, {obj} AS obj, {lit(obj_type)} AS obj_type, "
         f"CAST({lit(lang)} AS STRING) AS lang, "
-        f"{datatype or 'CAST(NULL AS STRING)'} AS datatype) END"
+        f"{datatype or 'CAST(NULL AS STRING)'} AS datatype",
     )
 
 
-def _finalize(df: DataFrame, entries: list[str], graph_kind: str, more: str | None = None) -> DataFrame:
-    """One row per non-null entry (plus the entries of the array expression
-    ``more``), deduplicated on (subj, pred, obj)."""
-    arr = f"array({', '.join(entries)})"
-    if more:
-        arr = f"concat({arr}, {more})"
-    return df.selectExpr(
-        f"inline(array_compact({arr}))", f"{lit(graph_kind)} AS graph_kind"
-    ).dropDuplicates(["subj", "pred", "obj"])
+def _graph(
+    kind: str,
+    entries: list[tuple[str, str]],
+    guard: str | None = None,
+    each: tuple[str, str, tuple[str, str]] | None = None,
+) -> str:
+    """A graph's entry array: each entry becomes a struct tagged with
+    ``kind`` when the graph's ``guard`` and the entry's own condition hold,
+    else NULL. ``each`` = (array column, lambda variable, entry) adds one
+    entry per element of that array column (NULL = empty)."""
+
+    def entry(t: tuple[str, str]) -> str:
+        cond, fields = t
+        if guard:
+            cond = f"({guard}) AND {cond}"
+        return f"CASE WHEN {cond} THEN struct({fields}, {lit(kind)} AS graph_kind) END"
+
+    arr = f"array({', '.join(entry(t) for t in entries)})"
+    if each:
+        col, var, t = each
+        arr = f"concat({arr}, transform(coalesce({col}, array()), {var} -> {entry(t)}))"
+    return arr
 
 
 def _event_entries(
@@ -70,10 +87,10 @@ def _event_entries(
     place_col: str | None,
     lbl_fi: str,
     lbl_en: str,
-) -> tuple[str, list[str]]:
+) -> tuple[str, list[tuple[str, str]]]:
     """Shared generate_event core (src/person_generator.py:21-54): the event
     URI expression and its triple entries."""
-    ev = f"concat({lit(EVENT_PREFIX + prefix)}, {_LOCAL_ID})"
+    ev = f"concat({lit(EVENT_PREFIX + prefix)}, local_id)"
     entries = [
         _t(ev, NS.RDF_TYPE, lit(event_type)),
         _t(ev, relation_prop, "person_uri"),
@@ -84,7 +101,7 @@ def _event_entries(
     if place_col:
         entries.append(_t(ev, NS.CRM + "P7_took_place_at", place_col + "_preferred"))
     if date_col:
-        ts = f"concat({lit(TIMES_PREFIX + prefix)}, {_LOCAL_ID})"
+        ts = f"concat({lit(TIMES_PREFIX + prefix)}, local_id)"
         date_lit = date_cmp_str(date_col, date_col + "_str")
         dt = f"CASE WHEN {date_col} IS NOT NULL THEN {lit(NS.XSD + 'date')} END"
         has_date = f"isnotnull({date_lit})"
@@ -111,12 +128,15 @@ def generate_persons(
     munics_dim: DataFrame,
     rank_labels_dim: DataFrame,
 ) -> dict[str, DataFrame]:
-    """-> {persons, promotions, joinings, births, deaths, disappearances,
-    woundings, documents_links} triples DataFrames."""
+    """-> {"generated": triples} — the persons, promotions, joinings, births,
+    deaths, disappearances, woundings and documents_links graphs as one
+    DataFrame, told apart by ``graph_kind``. Rows are not deduplicated: the
+    consumer's union applies set semantics."""
     # J10: skip casualties already linked to a person
     linked = person_links.selectExpr("subj AS record_uri")
     base = records.join(linked, "record_uri", "left_anti").selectExpr(
         "*",
+        f"{_LOCAL_ID} AS local_id",
         f"concat({lit(PERSON_URI_PREFIX)}, {_LOCAL_ID}) AS person_uri",
         # person_name = '{given} {family}' (src/person_generator.py:188)
         "concat_ws(' ', given_names, family_name) AS person_name",
@@ -148,13 +168,14 @@ def generate_persons(
         F.expr("min(CASE WHEN lang = 'fi' THEN label END) AS rank_label_fi"),
         F.expr("min(CASE WHEN lang = 'en' THEN label END) AS rank_label_en"),
     )
-    base = base.join(F.broadcast(rk), "rank_uri_linked", "left").cache()
+    base = base.join(F.broadcast(rk), "rank_uri_linked", "left")
 
     p = "person_uri"
     name = "person_name"
+    graphs = []
 
     # --- persons (G1), with one has_occupation triple per linked occupation
-    person_entries = [
+    graphs.append(_graph("persons", [
         _t(p, NS.RDF_TYPE, lit(NS.warsa("Person"))),
         _t(p, NS.FOAF + "familyName", "family_name", "literal"),
         _t(p, NS.FOAF + "firstName", "given_names", "literal"),
@@ -162,14 +183,11 @@ def generate_persons(
         _t(p, NS.SKOS_PREF_LABEL, name, "literal"),
         _t(p, NS.DCT_SOURCE, lit(NS.NARC_SOURCE)),
         _t(p, NS.CRM + "P70i_is_documented_in", "record_uri"),
-    ]
-    occ_entries = f"transform(coalesce(occ_uris, array()), o -> {_t(p, NS.BIOC + 'has_occupation', 'o')})"
-    persons = _finalize(base, person_entries, "persons", occ_entries)
+    ], each=("occ_uris", "o", _t(p, NS.BIOC + "has_occupation", "o"))))
 
-    # --- documents_links (G9)
-    documents_links = base.selectExpr(
-        *triple_exprs("record_uri", NS.CRM + "P70_documents", p, "documents_links")
-    )
+    # --- documents_links (G9): every unlinked record, unconditionally
+    _, fields = _t("record_uri", NS.CRM + "P70_documents", p)
+    graphs.append(_graph("documents_links", [("true", fields)]))
 
     # --- births / deaths (unguarded, G3/G4)
     _, ent = _event_entries(
@@ -177,20 +195,16 @@ def generate_persons(
         "date_of_birth", "municipality_of_birth",
         f"format_string('%s syntyi', {name})", f"format_string('%s was born', {name})",
     )
-    births = _finalize(base, ent, "births")
+    graphs.append(_graph("births", ent))
 
     _, ent = _event_entries(
         NS.warsa("Death"), "death_", NS.CRM + "P100_was_death_of",
         "date_of_death", "municipality_of_death",
         f"format_string('%s kuoli', {name})", f"format_string('%s died', {name})",
     )
-    deaths = _finalize(base, ent, "deaths")
+    graphs.append(_graph("deaths", ent))
 
     # --- disappearances (guarded, G5)
-    dis_base = base.where(_any_not_null(
-        "date_of_going_mia", "date_of_going_mia_str", "municipality_of_going_mia",
-        "place_of_going_mia_literal",
-    ))
     ev, ent = _event_entries(
         NS.warsa("Disappearing"), "disappear_cas_", NS.CRM + "P11_had_participant",
         "date_of_going_mia", "municipality_of_going_mia",
@@ -198,22 +212,23 @@ def generate_persons(
         f"format_string('%s went missing in action', {name})",
     )
     ent.append(_t(ev, NS.warsa("place_string"), "place_of_going_mia_literal", "literal"))
-    disappearances = _finalize(dis_base, ent, "disappearances")
+    graphs.append(_graph("disappearances", ent, guard=_any_not_null(
+        "date_of_going_mia", "date_of_going_mia_str", "municipality_of_going_mia",
+        "place_of_going_mia_literal",
+    )))
 
     # --- woundings (guarded, G6)
-    wnd_base = base.where(_any_not_null(
-        "date_of_wounding", "date_of_wounding_str", "municipality_of_wounding", "place_of_wounding",
-    ))
     ev, ent = _event_entries(
         NS.warsa("Wounding"), "wound_cas_", NS.CRM + "P11_had_participant",
         "date_of_wounding", "municipality_of_wounding",
         f"format_string('%s haavoittui', {name})", f"format_string('%s was wounded', {name})",
     )
     ent.append(_t(ev, NS.warsa("place_string"), "place_of_wounding", "literal"))
-    woundings = _finalize(wnd_base, ent, "woundings")
+    graphs.append(_graph("woundings", ent, guard=_any_not_null(
+        "date_of_wounding", "date_of_wounding_str", "municipality_of_wounding", "place_of_wounding",
+    )))
 
     # --- promotions (guarded on rank link, G7)
-    pro_base = base.where("rank_uri_linked IS NOT NULL")
     rank_fi = "coalesce(rank_label_fi, rank_literal)"
     rank_en = f"coalesce(rank_label_en, {rank_fi})"
     ev, ent = _event_entries(
@@ -223,27 +238,20 @@ def generate_persons(
         f"format_string('%s was promoted to %s', {name}, lower({rank_en}))",
     )
     ent.append(_t(ev, NS.HAS_RANK_PROP, "rank_uri_linked"))
-    promotions = _finalize(pro_base, ent, "promotions")
+    graphs.append(_graph("promotions", ent, guard="rank_uri_linked IS NOT NULL"))
 
     # --- joinings (guarded on unit links; ONE event URI per casualty carrying
     # one P144_joined_with triple per unit, G8)
-    join_base = base.where("size(coalesce(unit_uris, array())) > 0")
     ev, ent = _event_entries(
         NS.warsa("PersonJoining"), "joining_cas_", NS.CRM + "P143_joined",
         None, None,
         f"format_string('%s liittyi joukko-osastoon %s', {name}, unit_literal)",
         f"format_string('%s joined %s', {name}, unit_literal)",
     )
-    unit_entries = f"transform(unit_uris, u -> {_t(ev, NS.CRM + 'P144_joined_with', 'u')})"
-    joinings = _finalize(join_base, ent, "joinings", unit_entries)
+    graphs.append(_graph(
+        "joinings", ent, guard="size(coalesce(unit_uris, array())) > 0",
+        each=("unit_uris", "u", _t(ev, NS.CRM + "P144_joined_with", "u")),
+    ))
 
-    return {
-        "persons": persons,
-        "promotions": promotions,
-        "joinings": joinings,
-        "births": births,
-        "deaths": deaths,
-        "disappearances": disappearances,
-        "woundings": woundings,
-        "documents_links": documents_links,
-    }
+    return {"generated": base.selectExpr(f"inline(array_compact(concat({', '.join(graphs)})))")}
+

@@ -107,7 +107,8 @@ class Pipeline:
         obs = Observation()
         df = build().observe(obs, F.count(F.lit(1)).alias("n_rows"))
         storage.write_table(df, path, partition_by=partition_by)
-        out = self.spark.read.parquet(path)
+        # read back with the schema just written: no footer-inference job
+        out = self.spark.read.schema(df.schema).parquet(path)
         storage.write_manifest(
             path, storage.snapshot_manifest(name, fp, obs.get["n_rows"], inputs)
         )

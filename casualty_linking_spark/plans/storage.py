@@ -49,24 +49,14 @@ def write_table(
 ) -> None:
     """Idempotent write: dynamic partition overwrite keeps re-runs of a
     single partition from clobbering siblings (checkpoint-resume granularity
-    = one partition, per the north rule). The conf is scoped to this write —
-    session-global flips would silently change the overwrite semantics of a
-    caller's own partitioned writes (same discipline as
-    ``storage.scan_conf_scope``)."""
-    spark = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prior = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-    finally:
-        if prior is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prior)
+    = one partition, per the north rule). The mode is a writer option, so it
+    holds for this write only: the session conf (and with it the overwrite
+    semantics of a caller's own partitioned writes, possibly concurrent
+    ones) is never touched."""
+    w = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+    if partition_by:
+        w = w.partitionBy(*partition_by)
+    w.parquet(path)
 
 
 def write_manifest(path: str, manifest: dict) -> None:

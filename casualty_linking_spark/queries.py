@@ -30,6 +30,7 @@ from .operators.link_municipalities import link_municipalities
 from .operators.link_occupations import link_occupations
 from .operators.link_ranks import link_ranks
 from .operators.link_units import link_units
+from .operators.persons_generate import generate_persons
 from .operators.triples import records_to_triples, union_graphs
 
 # ---------------------------------------------------------------------------
@@ -763,7 +764,7 @@ def q_property_path_units(spark: SparkSession, sf_dir: str) -> DataFrame:
     P144_joined_with (unit_construct.sparql:8) as a 3-way self-join over the
     triples DataFrame — casualty -> generated person -> joining event -> unit."""
     gen = _gen_base(spark, sf_dir)
-    triples = union_graphs(gen["documents_links"], gen["joinings"])
+    triples = union_graphs(_gen_graph(gen, "documents_links"), _gen_graph(gen, "joinings"))
     doc = triples.filter(F.col("pred") == NS.CRM + "P70_documents").select(
         F.col("subj").alias("casualty"), F.col("obj").alias("person")
     )
@@ -802,7 +803,7 @@ def q_property_path_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from . import storage
 
     gen = _gen_base(spark, sf_dir)
-    triples = union_graphs(gen["documents_links"], gen["joinings"])
+    triples = union_graphs(_gen_graph(gen, "documents_links"), _gen_graph(gen, "joinings"))
     name = f"kgstore_{uuid.uuid4().hex[:8]}"
     tmp = tempfile.mkdtemp(prefix="kgstore_")
     try:
@@ -1175,9 +1176,8 @@ SELECT actor_uri AS vertex, least(record_uri, actor_uri) AS component FROM mutua
 # q: person generation (G1) + birth events (G3) — unlinked set = all records
 # ---------------------------------------------------------------------------
 
-def _gen_base(spark: SparkSession, sf_dir: str):
-    from .operators.persons_generate import generate_persons
-
+def _gen_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All generated graphs as one frame; take one with ``_gen_graph``."""
     rec = build_silver(spark, sf_dir)
     empty_links = spark.createDataFrame([], "subj string, obj string")
     rl = link_ranks(rec, dims.dim_rank_labels(spark))
@@ -1186,11 +1186,16 @@ def _gen_base(spark: SparkSession, sf_dir: str):
     return generate_persons(
         rec, empty_links, ol, rl, ul,
         dims.dim_municipalities(spark), dims.dim_rank_labels(spark),
-    )
+    )["generated"]
+
+
+def _gen_graph(gen: DataFrame, kind: str) -> DataFrame:
+    """One generated graph with its own (subj, pred, obj) set semantics."""
+    return gen.where(F.col("graph_kind") == kind).dropDuplicates(["subj", "pred", "obj"])
 
 
 def q_generate_persons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["persons"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "persons").select("subj", "pred", "obj", "lang")
 
 
 def _expected_occ_sql() -> str:
@@ -1251,7 +1256,7 @@ def oracle_generate_persons() -> str:
 
 
 def q_generate_births(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["births"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "births").select("subj", "pred", "obj", "lang")
 
 
 def oracle_generate_births() -> str:
@@ -1295,7 +1300,7 @@ def oracle_generate_births() -> str:
 
 
 def q_generate_deaths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["deaths"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "deaths").select("subj", "pred", "obj", "lang")
 
 
 def oracle_generate_deaths() -> str:
@@ -1338,7 +1343,7 @@ def oracle_generate_deaths() -> str:
 
 
 def q_generate_promotions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["promotions"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "promotions").select("subj", "pred", "obj", "lang")
 
 
 def oracle_generate_promotions() -> str:
@@ -1393,7 +1398,7 @@ def oracle_generate_promotions() -> str:
 
 
 def q_generate_joinings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["joinings"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "joinings").select("subj", "pred", "obj", "lang")
 
 
 def oracle_generate_joinings() -> str:
@@ -1484,7 +1489,7 @@ def _preferred_case(pid_expr: str) -> str:
 
 
 def q_generate_disappearances(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["disappearances"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "disappearances").select("subj", "pred", "obj", "lang")
 
 
 def oracle_generate_disappearances() -> str:
@@ -1502,7 +1507,7 @@ def oracle_generate_disappearances() -> str:
 
 
 def q_generate_woundings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _gen_base(spark, sf_dir)["woundings"].select("subj", "pred", "obj", "lang")
+    return _gen_graph(_gen_base(spark, sf_dir), "woundings").select("subj", "pred", "obj", "lang")
 
 
 def oracle_generate_woundings() -> str:
@@ -1528,7 +1533,7 @@ def q_documents_links(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     rec = build_silver(spark, sf_dir)
     cas = records_to_triples(rec, dims.dim_cemeteries(spark))
-    persons = _gen_base(spark, sf_dir)["persons"]
+    persons = _gen_graph(_gen_base(spark, sf_dir), "persons")
     return documents_links(cas, persons).select("subj", "pred", "obj")
 
 

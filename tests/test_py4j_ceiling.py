@@ -8,6 +8,10 @@ code (not on the host or the data size), so they are pinned as ceilings.
 Dimensions are inline VALUES tables, so no stage plan may scan an RDD of
 Python rows (``Scan ExistingRDD``); the only such scans left are the
 localCheckpoint lineage cuts of person linkage.
+
+A run must also leave nothing behind in the session (no cached plan), and
+the person tail's stage writes are pinned by their Spark job counts, which
+are as deterministic as the round trips.
 """
 
 import functools
@@ -37,7 +41,9 @@ from casualty_linking_spark.plans import pipeline, storage
 #
 # Every ceiling is at most the old memoized (second-build) count, except
 # broadcast_dims: the per-session dimension memo is gone, and rebuilding the
-# eight VALUES tables costs 64 round trips per Pipeline.
+# eight VALUES tables costs 64 round trips per Pipeline. Generating all eight
+# person/event graphs in one projection took generate_persons to 181 / 181
+# and, with one generated frame instead of eight, union_graphs to 14 / 14.
 CEILINGS = {
     "broadcast_dims": 100,
     "extract_mentions": 43,
@@ -50,8 +56,8 @@ CEILINGS = {
     "casualty_features": 140,
     "link_persons": 450,
     "records_to_triples": 60,
-    "generate_persons": 450,
-    "union_graphs": 21,
+    "generate_persons": 200,
+    "union_graphs": 14,
 }
 # person linkage cuts its lineage with localCheckpoint: three matching rounds
 # in the links, the star rounds of connected components
@@ -118,13 +124,19 @@ def _capture_plans(monkeypatch) -> dict:
     return plans
 
 
-def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeypatch):
+def _inputs(spark):
+    """40 synth records' transcripts and their actors."""
     transcripts = synth.transcripts_range(spark, 40)
     spark.range(40).selectExpr("id AS pid").createOrReplaceTempView("range_pids")
     actors = spark.sql(
         "WITH " + synth.synth_sql("spark", pid_source="range_pids") + ",\n"
         + synth.actors_sql("spark") + "\nSELECT * FROM actors"
     )
+    return transcripts, actors
+
+
+def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeypatch):
+    transcripts, actors = _inputs(spark)
     counts = _count_calls(spark, monkeypatch)
     plans = _capture_plans(monkeypatch)
 
@@ -145,3 +157,46 @@ def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeyp
             assert "Scan ExistingRDD" not in plan, (stage, plan)
     # the dimensions reach the plans as JVM-local relations
     assert "LocalTableScan" in plans["t3_rank_links"], plans["t3_rank_links"]
+
+
+# stage -> ceiling on the Spark jobs its build, write, read-back and metrics
+# sidecar run, first and second Pipeline.run alike (40 records, local[8]).
+# Measured before / after the person tail lost its redundant jobs:
+#
+#   stage           per-graph dedups, 2-checkpoint CC,    one-pass generation,
+#                   footer-inference read-back            one cut per CC round
+#   t4_components              22                                17
+#   t5_triples                 30                                14
+JOB_CEILINGS = {"t4_components": 17, "t5_triples": 14}
+
+
+def test_pipeline_leaves_no_cache_and_stage_jobs_under_ceilings(spark, tmp_path, monkeypatch):
+    transcripts, actors = _inputs(spark)
+    sc = spark.sparkContext
+    stage = pipeline.Pipeline._stage
+    groups = []
+
+    def grouped(pipe, name, *a, **k):
+        group = f"{pipe.root}:{name}"
+        groups.append((name, group))
+        sc.setJobGroup(group, name)
+        try:
+            return stage(pipe, name, *a, **k)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(pipeline.Pipeline, "_stage", grouped)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    jobs = []
+    for i in range(2):
+        groups.clear()
+        pipeline.Pipeline(spark, str(tmp_path / f"run{i}"), transcripts, actors=actors).run()
+        tracker = sc.statusTracker()
+        jobs.append({n: len(tracker.getJobIdsForGroup(g)) for n, g in groups})
+        # nothing the run built outlives it in the session
+        assert cache.isEmpty(), f"run {i} left cached plans in the session"
+
+    for i, run in enumerate(jobs):
+        over = {k: (run[k], c) for k, c in JOB_CEILINGS.items() if run[k] > c}
+        assert not over, f"run {i}: Spark jobs above ceiling: {over} (all stages: {run})"

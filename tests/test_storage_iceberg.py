@@ -52,3 +52,11 @@ def test_write_table_scopes_overwrite_mode_conf(spark, tmp_path):
     write_table(df, str(tmp_path / "t"), partition_by=["graph_kind"])
     assert spark.conf.get(key, None) == before
     assert spark.read.parquet(str(tmp_path / "t")).count() == 2
+    # re-writing one partition replaces that partition only
+    g1 = spark.createDataFrame([("s3", "g1")], "subj string, graph_kind string")
+    write_table(g1, str(tmp_path / "t"), partition_by=["graph_kind"])
+    assert spark.conf.get(key, None) == before
+    back = spark.read.parquet(str(tmp_path / "t"))
+    assert sorted(map(tuple, back.select("subj", "graph_kind").collect())) == [
+        ("s2", "g2"), ("s3", "g1"),
+    ]
