@@ -9,11 +9,11 @@ Pipeline stages (SURVEY.md §7.1):
     T1 mentions     vectorized extraction of casualty-record fields per turn
     T2 records      wide silver record per casualty + converters + validators
     T3 links        rank / unit / municipality / occupation entity linking
-    T4 person_links blocked record-linkage + connected-components canonicalization
+    T4 person_links blocked record-linkage + one-to-one matching; one component per link
     T5 triples      (subj, pred, obj) materialization, set semantics
 
-plus large-scale training-data ops (dedup, similarity search, text analysis,
-multimodal plumbing) over the driver's documents/embeddings tables.
+plus large-scale training-data ops (dedup, similarity search, text analysis)
+over the driver's documents/embeddings tables.
 """
 
 __version__ = "0.1.0"

@@ -435,28 +435,6 @@ def codes_cte() -> str:
 # src/linker.py:94-111).
 # --------------------------------------------------------------------------
 
-def municipalities_ttl() -> str:
-    """Render the linked-municipalities graph in the reference's fixture
-    block shape (input/old_municipalities.ttl layout) from the dim literals —
-    the generator of tests/fixtures/linked_municipalities.ttl, so the TTL
-    reader's output is testable against dim_municipalities row-for-row."""
-    blocks = []
-    for uri, label, cur, war, pref in municipality_rows():
-        lines = [
-            f"<{uri}>",
-            f"        a       <{NS.cas('Municipality')}> ;",
-            f"        <{NS.SKOS_PREF_LABEL}>",
-            f'                "{label}"@fi ;',
-        ]
-        if cur:
-            lines += [f"        <{NS.cas('current_municipality')}>", f"                <{cur}> ;"]
-        if war:
-            lines += [f"        <{NS.cas('wartime_municipality')}>", f"                <{war}> ;"]
-        lines += [f"        <{NS.cas('preferred_municipality')}>", f"                <{pref}> ."]
-        blocks.append("\n".join(lines))
-    return "\n\n".join(blocks) + "\n"
-
-
 def dim_municipalities_from_triples(triples: DataFrame) -> DataFrame:
     """Pivot a parsed municipalities graph (sources.ttl.read_turtle_blocks)
     into the dim_municipalities shape — dims become data instead of in-code

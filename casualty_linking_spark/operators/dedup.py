@@ -278,11 +278,6 @@ def _hex_nibble_to_int(c: Column) -> Column:
     return F.instr(F.lit(_HEX), c) - 1
 
 
-# (aggs, digits, hex concat) Column trees — pure functions of column names;
-# built once per process (the 65-agg list cost ~1 s of py4j per call).
-_SIMHASH_COLS: tuple | None = None
-
-
 def simhash64_fingerprints(documents: DataFrame) -> DataFrame:
     """(doc_id, simhash) — 64-bit simhash as a 16-char lowercase hex string.
 
@@ -297,34 +292,36 @@ def simhash64_fingerprints(documents: DataFrame) -> DataFrame:
     keeps wordless docs as a null-word row: their bit-sums are null, every
     majority test is null -> 0, yielding the all-zeros fingerprint with no
     second scan or join-back."""
-    global _SIMHASH_COLS
-    if _SIMHASH_COLS is None:
-        aggs = [F.count("word").alias("n_words")]
-        for i in range(SIMHASH_NIBBLES):
-            v = _hex_nibble_to_int(F.substring("h", i + 1, 1))
-            for j in range(4):  # bit weight 2^(3-j) within the nibble
-                aggs.append(
-                    F.sum((F.floor(v / (1 << (3 - j))).cast("int") % 2)).alias(f"s_{i}_{j}")
-                )
-        digits = [
-            sum(
-                F.when(F.col(f"s_{i}_{j}") * 2 > F.col("n_words"), F.lit(1 << (3 - j))).otherwise(F.lit(0))
-                for j in range(4)
-            ).alias(f"d{i}")
-            for i in range(SIMHASH_NIBBLES)
-        ]
-        hexcat = F.concat(
-            *[F.substring(F.lit(_HEX), F.col(f"d{i}") + 1, 1) for i in range(SIMHASH_NIBBLES)]
-        ).alias("simhash")
-        _SIMHASH_COLS = (aggs, digits, hexcat)
-    aggs, digits, hexcat = _SIMHASH_COLS
+
+    def bit(i: int, j: int) -> str:  # bit weight 2^(3-j) of nibble i
+        return (
+            f"CAST(floor((instr('{_HEX}', substring(h, {i + 1}, 1)) - 1)"
+            f" / {1 << (3 - j)}) AS INT) % 2"
+        )
+
+    nibbles = range(SIMHASH_NIBBLES)
+    aggs = ", ".join(
+        ["count(word) AS n_words"]
+        + [f"sum({bit(i, j)}) AS s_{i}_{j}" for i in nibbles for j in range(4)]
+    )
+    digits = [
+        " + ".join(
+            f"CASE WHEN f.s_{i}_{j} * 2 > f.n_words THEN {1 << (3 - j)} ELSE 0 END"
+            for j in range(4)
+        ) + f" AS d{i}"
+        for i in nibbles
+    ]
+    hexcat = ", ".join(f"substring('{_HEX}', d{i} + 1, 1)" for i in nibbles)
 
     wx = documents.select(
         F.col("doc_id"),
         F.explode_outer(F.array_distinct(words_col(F.col("text")))).alias("word"),
     ).withColumn("h", F.md5("word"))
-    sums = wx.groupBy("doc_id").agg(*aggs)
-    return sums.select("doc_id", *digits).select("doc_id", hexcat)
+    # one struct of the 65 aggregates: one expression to parse, not 65
+    sums = wx.groupBy("doc_id").agg(F.expr(f"struct({aggs}) AS f"))
+    return sums.selectExpr("doc_id", *digits).selectExpr(
+        "doc_id", f"concat({hexcat}) AS simhash"
+    )
 
 
 def simhash_buckets(documents: DataFrame) -> DataFrame:

@@ -34,11 +34,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 from .dedup import words_col
 
 
-def norm_gram(text: Column) -> Column:
-    """Whitespace-joined normalized tokens of a label string."""
-    return F.array_join(words_col(text), " ")
-
-
 def _windows(w: Column, n: int) -> Column:
     """All full n-token windows of token array ``w`` as structs
     (start_tok 1-based, n_words, gram). greatest(...,1) keeps sequence()

@@ -13,8 +13,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .. import namespaces as NS
-
 
 def link_municipalities(
     base_munics: DataFrame, pnr_labels: DataFrame, warsa_labels: DataFrame
@@ -45,28 +43,3 @@ def link_municipalities(
         F.coalesce("warsa_uri", "pnr_uri", "mun_uri").alias("preferred_municipality"),
     )
 
-
-def municipality_link_triples(munics: DataFrame) -> DataFrame:
-    """Linked dim -> triples rows (current/wartime/preferred), replacing the
-    reference's remove + re-add of the link predicates (src/linker.py:95-112)."""
-    parts = []
-    for col, pred in [
-        ("current_municipality", NS.cas("current_municipality")),
-        ("wartime_municipality", NS.cas("wartime_municipality")),
-        ("preferred_municipality", NS.cas("preferred_municipality")),
-    ]:
-        parts.append(
-            munics.filter(F.col(col).isNotNull()).select(
-                F.col("mun_uri").alias("subj"),
-                F.lit(pred).alias("pred"),
-                F.col(col).alias("obj"),
-                F.lit("uri").alias("obj_type"),
-                F.lit(None).cast("string").alias("lang"),
-                F.lit(None).cast("string").alias("datatype"),
-                F.lit("municipalities").alias("graph_kind"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out

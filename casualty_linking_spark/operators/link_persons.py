@@ -218,15 +218,19 @@ def _greedy_match(scored: DataFrame, rounds: int = 3) -> DataFrame:
     keeps pairs that are their record's AND their actor's best remaining
     option (ties broken by partner URI), then removes both endpoints. The
     union over rounds is a matching (every endpoint appears at most once) —
-    the property oracle_connected_components relies on."""
+    the property oracle_connected_components and Pipeline.run's projected
+    t4_components rely on."""
     remaining = scored
     matched = []
     for _ in range(rounds):
-        # lazy checkpoint per round: each m feeds the result union AND two
+        # checkpoint per round: each m feeds the result union AND two
         # anti-joins, and remaining(i+1) embeds remaining(i) through them —
         # without the cut the logical plan grows 3^rounds (measured: rounds
         # beyond ~8 hang in the optimizer on a 40-row input). The cut makes
-        # growth linear and computes each round's matching once.
+        # growth linear and computes each round's matching once. With AQE on
+        # (the session default), eager=False still runs the round's window
+        # shuffle as a job at this call, not in the first downstream job
+        # (ROADMAP item 7).
         m = (
             remaining.selectExpr(
                 "record_uri",
@@ -320,13 +324,14 @@ def link_persons(
         join_keys = ["bk"]
 
     pairs = left.join(right, join_keys).dropDuplicates(["record_uri", "actor_uri"])
-    # Lazy lineage cut: every greedy-match round's windows and anti-joins
+    # Lineage cut: every greedy-match round's windows and anti-joins
     # reference `scored`; without the cut each round RE-RUNS the blocked
     # candidate join + vectorized scoring (measured: the 100k-record eval
-    # multiplied the linkage cost several times over). Lazy (not eager) so
-    # the materialization happens inside the first downstream job rather
-    # than blocking the driver here — in the production pipeline the same
-    # cut is the scored-pairs table materialization.
+    # multiplied the linkage cost several times over). eager=False does not
+    # defer the work here: with AQE on (the session default) the adaptive
+    # plan runs its shuffle stages at this call, so the join and scoring run
+    # as driver-side jobs before any stage write. Making the cut a written
+    # scored-pairs stage is ROADMAP item 7.
     scored = (
         score_pairs(pairs)
         .where(f"score >= {lit(threshold)}")
@@ -345,8 +350,8 @@ def link_persons(
     # partners; src/linker.py:246) — a fixed 3 rounds resolves two-deep tie
     # cascades, and residual ambiguity stays conservatively unmatched.
     # Each round is two windows + two anti-joins over the post-threshold
-    # pair set (tiny vs the corpus); a production pipeline materializes
-    # `scored` once (T-table) so rounds never rescore.
+    # pair set (tiny vs the corpus); the cut above keeps rounds from
+    # rescoring.
     mutual = _greedy_match(scored, rounds=3)
     return mutual.selectExpr(
         *triple_exprs("record_uri", NS.CRM + "P70_documents", "actor_uri", "documents_links")
@@ -403,8 +408,9 @@ def connected_components(
     a fixed point (star graphs rooted at component minima).
 
     algorithm='label': the original iterative min-label propagation —
-    O(graph diameter) iterations; kept as the property-test cross-check
-    and for shallow mutual-best-match closures where diameter ≈ 2.
+    O(graph diameter) iterations; only the tests call it, as the
+    cross-check of 'star'. (The pipeline's person links are a matching, so
+    their components need neither: ``Pipeline.run`` projects them.)
 
     Both raise on non-convergence at max_iter rather than silently
     returning split components. Each iteration localCheckpoints to cut the

@@ -1,15 +1,12 @@
 """Text-analysis operators for training-data pipelines over ``documents``:
 language ID (n-gram/stopword heuristic), quality scoring, token counting,
 and document fingerprinting. All JVM-side built-ins (regexp counts, array
-ops) so they survive the 100 TB scan without Python in the loop; a true
-rolling-hash fingerprint is provided as an Arrow pandas UDF variant.
+ops) so they survive the 100 TB scan without Python in the loop.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window, functions as F, types as T
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 FI_STOPWORDS = ["ja", "on", "ei", "että", "se", "hän", "oli", "mutta"]
 EN_STOPWORDS = ["the", "and", "of", "to", "is", "in", "that", "it"]
@@ -71,22 +68,6 @@ def fingerprint_sorted_words(text: Column) -> Column:
     multiset — catches shuffled/near-identical boilerplate."""
     words = F.array_sort(F.filter(F.split(F.lower(text), r"\W+"), lambda w: w != ""))
     return F.md5(F.array_join(words, " "))
-
-
-@F.pandas_udf(T.LongType())
-def rolling_hash_fingerprint(texts: pd.Series) -> pd.Series:
-    """Rabin-Karp rolling polynomial hash (base 257, mod 2^61-1) over UTF-8
-    bytes — the true rolling-hash variant (not SQL-expressible; rows-only
-    checked by the driver)."""
-    MOD = (1 << 61) - 1
-    BASE = 257
-    out = np.zeros(len(texts), dtype=np.int64)
-    for i, t in enumerate(texts.fillna("")):
-        h = 0
-        for b in t.encode("utf-8"):
-            h = (h * BASE + b) % MOD
-        out[i] = h
-    return pd.Series(out)
 
 
 def document_profile(documents: DataFrame) -> DataFrame:

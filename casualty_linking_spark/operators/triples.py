@@ -200,11 +200,6 @@ def subjects_by_po(graph: DataFrame, pred: str, obj: str) -> DataFrame:
     return graph.filter((F.col("pred") == pred) & (F.col("obj") == obj)).select("subj")
 
 
-def objects_of(graph: DataFrame, pred: str) -> DataFrame:
-    """graph.objects(None, pred) — (subj, obj) pairs for a predicate."""
-    return graph.filter(F.col("pred") == pred).select("subj", "obj")
-
-
 def upsert_triples(
     base: DataFrame,
     delta: DataFrame,

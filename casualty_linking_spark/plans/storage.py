@@ -5,8 +5,10 @@ jar, so the layer writes partitioned parquet with the same operational
 contract — idempotent per-partition overwrite (dynamic partition overwrite =
 the MERGE/overwrite-by-partition pattern), a JSON manifest per table
 (snapshot metadata: row count, fingerprint, lineage), and per-partition
-metrics. ``use_iceberg()`` switches to a real catalog when one is configured
-(spark.sql.catalog.* present) — same call sites, no code change upstream.
+metrics. ``Pipeline._stage`` always writes through ``write_table`` (parquet).
+``write_table_iceberg`` is a separate catalog write path that nothing on the
+pipeline path calls; ``use_iceberg()`` only reports whether a catalog is
+configured, and the Iceberg test uses it to skip when none is.
 """
 
 from __future__ import annotations

@@ -380,13 +380,6 @@ def transcripts_from_sf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(sql)
 
 
-def records_from_sf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The wide raw-record CTE (pre-transcript), for tests/goldens."""
-    _register_parquet(spark, sf_dir, ["customer"])
-    sql = "WITH " + CUSTOMER_PIDS_SQL + ",\n" + synth_sql("spark") + "\nSELECT * FROM records"
-    return spark.sql(sql)
-
-
 def transcripts_range(spark: SparkSession, n_records: int) -> DataFrame:
     """Transcripts for ``n_records`` synthetic conversations via spark.range —
     the scale path: generation is embarrassingly parallel, no driver data."""

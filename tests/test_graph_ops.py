@@ -187,6 +187,30 @@ def test_greedy_match_equals_sequential_greedy(spark):
         assert truncated <= expected
 
 
+def test_greedy_match_is_a_matching_under_ties(spark):
+    """_greedy_match returns a matching however its windows break ties: no
+    record and no actor appears twice. Pipeline.run's closed-form
+    t4_components (one component per link) rests on this. Adversarial
+    inputs: every score equal (complete bipartite, duplicate pairs
+    included), and a tie chain whose cascade runs deeper than 3 rounds."""
+    from casualty_linking_spark.operators.link_persons import _greedy_match
+
+    complete = [(f"rec{l}", f"act{r}", 0.9) for l in range(6) for r in range(5)]
+    complete += complete[:7]
+    # rec_i ties between act_i and act_(i+1); each round resolves one link
+    # at the chain's head, so 3 rounds stop well short of its end
+    chain = [(f"rec{i}", f"act{i + d}", 0.9) for i in range(8) for d in (0, 1)]
+    for name, pairs in [("complete", complete), ("chain", chain)]:
+        sdf = spark.createDataFrame(pairs, "record_uri string, actor_uri string, score double")
+        for rounds in (3, 12):
+            got = [(r.record_uri, r.actor_uri) for r in _greedy_match(sdf, rounds=rounds).collect()]
+            assert got, (name, rounds)
+            recs, acts = [r for r, _ in got], [a for _, a in got]
+            assert len(set(recs)) == len(recs), (name, rounds, got)
+            assert len(set(acts)) == len(acts), (name, rounds, got)
+            assert set(got) <= {(r, a) for r, a, _ in pairs}, (name, rounds, got)
+
+
 def test_constraint_violations_hand_graph(spark):
     """Planted violations: s1 has two distinct death dates (cardinality),
     s2 lacks the required death date (missing), duplicate identical triples

@@ -7,11 +7,13 @@ rendered their projections as SQL text. These counts depend only on the
 code (not on the host or the data size), so they are pinned as ceilings.
 Dimensions are inline VALUES tables, so no stage plan may scan an RDD of
 Python rows (``Scan ExistingRDD``); the only such scans left are the
-localCheckpoint lineage cuts of person linkage.
+localCheckpoint lineage cuts of the person links.
 
 A run must also leave nothing behind in the session (no cached plan), and
 the person tail's stage writes are pinned by their Spark job counts, which
-are as deterministic as the round trips.
+are as deterministic as the round trips. The components stage is one
+projection of the person links, checked here against the general
+connected-components operator.
 """
 
 import functools
@@ -19,6 +21,7 @@ from collections import Counter
 
 from casualty_linking_spark import dims, synth
 from casualty_linking_spark.operators import extract, records
+from casualty_linking_spark.operators.link_persons import connected_components
 from casualty_linking_spark.plans import pipeline, storage
 
 # operator call -> ceiling on its py4j round trips in one Pipeline.run, first
@@ -59,9 +62,9 @@ CEILINGS = {
     "generate_persons": 200,
     "union_graphs": 14,
 }
-# person linkage cuts its lineage with localCheckpoint: three matching rounds
-# in the links, the star rounds of connected components
-CHECKPOINT_STAGES = {"t4_person_links", "t4_components"}
+# person linkage cuts its lineage with localCheckpoint: the scored pairs and
+# three matching rounds
+CHECKPOINT_STAGES = {"t4_person_links"}
 
 
 def _count_calls(spark, monkeypatch):
@@ -161,13 +164,14 @@ def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeyp
 
 # stage -> ceiling on the Spark jobs its build, write, read-back and metrics
 # sidecar run, first and second Pipeline.run alike (40 records, local[8]).
-# Measured before / after the person tail lost its redundant jobs:
+# Measured as the person tail lost its redundant jobs:
 #
-#   stage           per-graph dedups, 2-checkpoint CC,    one-pass generation,
-#                   footer-inference read-back            one cut per CC round
-#   t4_components              22                                17
-#   t5_triples                 30                                14
-JOB_CEILINGS = {"t4_components": 17, "t5_triples": 14}
+#   stage           per-graph dedups,    one-pass generation,   components
+#                   2-checkpoint CC,     one cut per            projected from
+#                   footer inference     CC round               the matching
+#   t4_components          22                   17                    1
+#   t5_triples             30                   14                   14
+JOB_CEILINGS = {"t4_components": 1, "t5_triples": 14}
 
 
 def test_pipeline_leaves_no_cache_and_stage_jobs_under_ceilings(spark, tmp_path, monkeypatch):
@@ -200,3 +204,18 @@ def test_pipeline_leaves_no_cache_and_stage_jobs_under_ceilings(spark, tmp_path,
     for i, run in enumerate(jobs):
         over = {k: (run[k], c) for k, c in JOB_CEILINGS.items() if run[k] > c}
         assert not over, f"run {i}: Spark jobs above ceiling: {over} (all stages: {run})"
+
+
+def test_closed_form_components_equal_the_general_operator(spark, tmp_path):
+    """t4_components is projected from the person links, which are a
+    matching; over the written links it must equal the general operator."""
+    transcripts, actors = _inputs(spark)
+    root = tmp_path / "run"
+    pipeline.Pipeline(spark, str(root), transcripts, actors=actors).run()
+    links = spark.read.parquet(str(root / "t4_person_links"))
+    assert links.count() > 0
+    got = sorted(spark.read.parquet(str(root / "t4_components")).collect())
+    edges = links.selectExpr("subj AS src", "obj AS dst")
+    for algorithm in ("star", "label"):
+        want = sorted(connected_components(edges, algorithm=algorithm).collect())
+        assert got == want, algorithm

@@ -1,6 +1,5 @@
-"""Streaming ingest + multimodal plumbing tests."""
-
-import shutil
+"""Streaming ingest tests: availableNow mention extraction, incremental
+silver, watermarked counts and streaming document dedup."""
 
 from pyspark.sql import functions as F
 
@@ -38,35 +37,6 @@ def test_stream_mentions_availablenow(spark, tmp_path):
     q2 = stream_mentions(spark, inp, out, ckpt)
     q2.awaitTermination(120)
     assert spark.read.parquet(out).count() == 60 * synth.TURNS_PER_CONV
-
-
-def test_multimodal_plumbing(spark, tmp_path):
-    from casualty_linking_spark.operators.multimodal import (
-        extract_features, frame_sample_plan, synthesize_media,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    media = synthesize_media(docs)
-    assert media.schema["payload"].dataType.typeName() == "binary"
-
-    feats = extract_features(media, fake_decode=True)
-    rows = feats.collect()
-    assert len(rows) == 50
-    assert all(len(r.feature) == 4 for r in rows)
-    assert all(r.n_bytes == 32 for r in rows)  # 2x md5 -> 32 bytes
-
-    frames = frame_sample_plan(media, every_ms=1000)
-    n_videos = media.filter("kind = 'video' and meta_duration_ms > 0").count()
-    assert frames.select("media_id").distinct().count() == n_videos
-
-
-def test_multimodal_real_decode_stubbed(spark):
-    """The real decode path must be a clearly-marked NotImplementedError."""
-    import pytest
-    from casualty_linking_spark.operators.multimodal import decode_image_batch
-
-    with pytest.raises(NotImplementedError):
-        decode_image_batch(None)
 
 
 def test_streaming_silver_equals_batch(spark):
@@ -200,348 +170,3 @@ def test_stream_dedup_drops_duplicates_and_is_incremental(spark, tmp_path):
     got2 = spark.read.parquet(outp)
     assert got2.count() == 15  # 11 + the 4 new texts only
     assert got2.select("text_hash").distinct().count() == 15
-
-
-def _make_ppm(w, h, rgb):
-    body = bytes(rgb) * (w * h)
-    return b"P6\n# comment\n%d %d\n255\n" % (w, h) + body
-
-
-def _make_bmp(w, h, bgr):
-    import struct
-
-    stride = (w * 3 + 3) // 4 * 4
-    raster = (bytes(bgr) * w + b"\x00" * (stride - w * 3)) * h
-    pixel_offset = 14 + 40
-    header = b"BM" + struct.pack("<IHHI", pixel_offset + len(raster), 0, 0, pixel_offset)
-    dib = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raster), 2835, 2835, 0, 0)
-    return header + dib + raster
-
-
-def test_real_decode_ppm_bmp_roundtrip():
-    """Pure-numpy decode of the two lib-free formats: known pixel values,
-    dimensions, BGR->RGB order, bottom-up flip, row padding."""
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import (
-        decode_bmp,
-        decode_image,
-        decode_ppm,
-        resize_nearest,
-    )
-
-    ppm = decode_ppm(_make_ppm(3, 2, (10, 20, 30)))
-    assert ppm.shape == (2, 3, 3) and (ppm == [10, 20, 30]).all()
-    bmp = decode_bmp(_make_bmp(3, 2, (30, 20, 10)))  # BGR on disk
-    assert bmp.shape == (2, 3, 3) and (bmp == [10, 20, 30]).all()
-    th = resize_nearest(ppm, 2, 2)
-    assert th.shape == (2, 2, 3)
-    import pytest
-
-    # truncated JPEG payloads fail loudly, unknown magic falls back to None
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8" + b"x" * 16)
-    assert decode_image(b"garbage") is None
-
-
-def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
-    body = ctype + data
-    return struct.pack(">I", len(data)) + body + struct.pack(">I", zlib.crc32(body))
-
-
-def _make_png(w, h, color_type, channels, rows, plte=None):
-    """Hand-built PNG (filter 0 scanlines) — independent of encode_png, so
-    the decoder is checked against the spec's byte layout, not a round-trip
-    through shared logic."""
-    import struct
-    import zlib
-
-    raw = b"".join(b"\x00" + bytes(r) for r in rows)
-    out = b"\x89PNG\r\n\x1a\n" + _png_chunk(
-        b"IHDR", struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    )
-    if plte is not None:
-        out += _png_chunk(b"PLTE", bytes(plte))
-    return out + _png_chunk(b"IDAT", zlib.compress(raw)) + _png_chunk(b"IEND", b"")
-
-
-def test_real_decode_png_all_color_types():
-    """Pure-numpy PNG decode: hand-built filter-0 files for gray/RGB/
-    palette/gray+alpha/RGBA must yield the exact planted pixels."""
-    import numpy as np
-    import pytest
-
-    from casualty_linking_spark.operators.multimodal import decode_image, decode_png
-
-    # gray (0): 2x2 values 10..40 -> replicated to 3 channels
-    g = decode_png(_make_png(2, 2, 0, 1, [[10, 20], [30, 40]]))
-    assert g.shape == (2, 2, 3) and (g[:, :, 0] == [[10, 20], [30, 40]]).all()
-    assert (g[:, :, 0] == g[:, :, 1]).all() and (g[:, :, 0] == g[:, :, 2]).all()
-
-    # RGB (2): 2x1
-    rgb = decode_png(_make_png(2, 1, 2, 3, [[1, 2, 3, 4, 5, 6]]))
-    assert rgb.shape == (1, 2, 3) and (rgb[0, 0] == [1, 2, 3]).all() and (rgb[0, 1] == [4, 5, 6]).all()
-
-    # palette (3): indices -> PLTE colors
-    pal = decode_png(
-        _make_png(2, 1, 3, 1, [[1, 0]], plte=[10, 20, 30, 40, 50, 60])
-    )
-    assert (pal[0, 0] == [40, 50, 60]).all() and (pal[0, 1] == [10, 20, 30]).all()
-
-    # gray+alpha (4): alpha dropped
-    ga = decode_png(_make_png(1, 1, 4, 2, [[77, 128]]))
-    assert (ga[0, 0] == [77, 77, 77]).all()
-
-    # RGBA (6): alpha dropped
-    rgba = decode_png(_make_png(1, 1, 6, 4, [[9, 8, 7, 255]]))
-    assert (rgba[0, 0] == [9, 8, 7]).all()
-
-    # dispatch picks it up
-    assert decode_image(_make_png(1, 1, 2, 3, [[5, 6, 7]])).shape == (1, 1, 3)
-
-    # corrupt payloads fail as ValueError (batch-tolerant), never crash-class
-    with pytest.raises(ValueError):
-        decode_png(b"\x89PNG\r\n\x1a\n" + b"x" * 16)  # truncated
-    bad_idat = _make_png(2, 2, 0, 1, [[1, 2], [3, 4]])
-    with pytest.raises(ValueError):
-        decode_png(bad_idat.replace(b"IDAT", b"IDAT", 1)[:-20] + b"\x00" * 20)
-    with pytest.raises(ValueError):  # palette index out of range
-        decode_png(_make_png(1, 1, 3, 1, [[5]], plte=[1, 2, 3]))
-
-
-def test_real_decode_png_filters_roundtrip():
-    """All five scanline filters: the encoder applies the spec's filter
-    FORMULAS (Sub/Up/Average/Paeth) and the decoder must invert them —
-    independent code paths, exact pixel equality, on a gradient image
-    where every filter produces distinct bytes."""
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import decode_png, encode_png
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(5, 4, 3), dtype=np.uint8)
-    for ft in range(5):
-        out = decode_png(encode_png(img, filter_type=ft))
-        assert (out == img).all(), f"filter {ft} mismatch"
-
-
-def test_image_features_decodes_real_and_flags_fakes(spark):
-    """mapInPandas stage: real PPM payloads decode (exact mean_rgb), the
-    md5-derived fake payloads yield decoded=false rows, nothing throws."""
-    from casualty_linking_spark.operators.multimodal import image_features
-
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import encode_jpeg
-
-    rows = [
-        (1, "image", _make_ppm(4, 4, (100, 150, 200))),
-        (2, "image", _make_bmp(2, 2, (200, 150, 100))),
-        (3, "image", b"\x00\x01\x02not-an-image"),
-        (4, "audio", b"ignored"),
-        (5, "image", encode_jpeg(np.full((8, 8, 3), [100, 150, 200], dtype=np.uint8))),
-    ]
-    media = spark.createDataFrame(
-        [(i, k, bytearray(p)) for i, k, p in rows],
-        "media_id long, kind string, payload binary",
-    )
-    out = {r["media_id"]: r for r in image_features(media).collect()}
-    assert set(out) == {1, 2, 3, 5}  # audio row filtered
-    assert out[1]["decoded"] and out[1]["width"] == 4
-    assert [round(x) for x in out[1]["mean_rgb"]] == [100, 150, 200]
-    assert out[2]["decoded"] and [round(x) for x in out[2]["mean_rgb"]] == [100, 150, 200]
-    assert not out[3]["decoded"] and out[3]["mean_rgb"] is None
-    # flat JPEG decodes through the same Spark stage (lossy: +-2 per channel)
-    assert out[5]["decoded"] and out[5]["width"] == 8
-    assert all(abs(m - e) <= 2 for m, e in zip(out[5]["mean_rgb"], [100, 150, 200]))
-
-
-def test_decoder_roundtrip_property():
-    """Hypothesis: for arbitrary small dimensions and pixel colors, encode ->
-    decode is the identity for both lib-free formats (exercises row padding
-    across widths and the bottom-up flip across heights)."""
-    import numpy as np
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from casualty_linking_spark.operators.multimodal import decode_bmp, decode_ppm
-
-    @settings(max_examples=25, deadline=None)
-    @given(
-        w=st.integers(1, 9),
-        h=st.integers(1, 9),
-        rgb=st.tuples(st.integers(0, 255), st.integers(0, 255), st.integers(0, 255)),
-    )
-    def check(w, h, rgb):
-        ppm = decode_ppm(_make_ppm(w, h, rgb))
-        assert ppm.shape == (h, w, 3) and (ppm == list(rgb)).all()
-        bmp = decode_bmp(_make_bmp(w, h, rgb[::-1]))
-        assert bmp.shape == (h, w, 3) and (bmp == list(rgb)).all()
-
-    check()
-
-
-def test_real_decode_wav():
-    """Pure-numpy WAV decode: hand-built RIFF bytes (independent of
-    encode_wav) with known 16-bit samples; 8-bit path; corrupt tolerance."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from casualty_linking_spark.operators.multimodal import decode_wav, encode_wav
-
-    # hand-built: mono 16-bit, rate 8000, samples [0, 16384, -16384, -32768]
-    pcm = struct.pack("<4h", 0, 16384, -16384, -32768)
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    body += b"data" + struct.pack("<I", len(pcm)) + pcm
-    rate, x = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
-    assert rate == 8000 and x.shape == (4, 1)
-    assert np.allclose(x[:, 0], [0.0, 0.5, -0.5, -1.0])
-
-    # 8-bit unsigned: 128 -> 0.0, 255 -> ~1.0, 0 -> -1.0
-    pcm8 = bytes([128, 255, 0])
-    fmt8 = struct.pack("<HHIIHH", 1, 1, 4000, 4000, 1, 8)
-    body8 = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt8)) + fmt8
-    body8 += b"data" + struct.pack("<I", len(pcm8)) + pcm8
-    rate8, x8 = decode_wav(b"RIFF" + struct.pack("<I", len(body8)) + body8)
-    assert rate8 == 4000 and np.allclose(x8[:, 0], [0.0, 127 / 128, -1.0])
-
-    # round-trip through the encoder (stereo)
-    rng = np.random.default_rng(3)
-    s = rng.uniform(-0.9, 0.9, size=(50, 2)).astype(np.float32)
-    rate2, back = decode_wav(encode_wav(s, 16000))
-    assert rate2 == 16000 and back.shape == (50, 2)
-    assert np.abs(back - s).max() < 1e-4  # 16-bit quantization
-
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFFxxxxWAVE")  # no chunks
-    with pytest.raises(ValueError):
-        decode_wav(b"garbage")
-    # non-PCM format code
-    fmtc = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-    bodyc = b"WAVE" + b"fmt " + struct.pack("<I", len(fmtc)) + fmtc
-    bodyc += b"data" + struct.pack("<I", 0)
-    with pytest.raises(ValueError):
-        decode_wav(b"RIFF" + struct.pack("<I", len(bodyc)) + bodyc)
-
-
-def test_audio_features_end_to_end(spark):
-    """mapInPandas audio stage: real WAV payloads decode with exact
-    duration/RMS/ZCR; non-audio rows are filtered; garbage payloads yield
-    decoded=false."""
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        audio_features,
-        encode_wav,
-    )
-
-    # 1s of 8kHz square wave at +/-0.5 -> rms 0.5, zcr ~ 880/8000
-    t = np.arange(8000)
-    sq = np.where((t // 100) % 2 == 0, 0.5, -0.5).astype(np.float32)
-    rows = [
-        (1, "audio", "audio/wav", bytearray(encode_wav(sq, 8000)), None, None, 1000),
-        (2, "audio", "application/octet-stream", bytearray(b"not audio"), None, None, 5),
-        (3, "image", "image/png", bytearray(b"x"), 1, 1, None),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r.media_id: r for r in audio_features(media).collect()}
-    assert set(out) == {1, 2}  # image row filtered
-    a = out[1]
-    assert a.decoded and a.sample_rate == 8000 and a.n_channels == 1
-    assert a.duration_ms == 1000
-    assert abs(a.rms - 0.5) < 1e-3 and abs(a.peak - 0.5) < 1e-3
-    assert abs(a.zero_crossing_rate - 79 / 7999) < 1e-3
-    assert not out[2].decoded and out[2].rms is None
-
-
-def test_real_decode_jpeg_roundtrip_rgb():
-    """Baseline JPEG round-trip on a smooth gradient (non-multiple-of-8
-    dims exercise edge padding + crop). Lossy: bounded error, not equality."""
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    h, w = 17, 24
-    y, x = np.mgrid[0:h, 0:w]
-    img = np.stack([(x * 9) % 256, (y * 11) % 256, ((x + y) * 5) % 256], axis=-1).astype(np.uint8)
-    dec = decode_jpeg(encode_jpeg(img, quality=90))
-    assert dec.shape == (h, w, 3) and dec.dtype == np.uint8
-    err = np.abs(dec.astype(int) - img.astype(int))
-    assert err.mean() < 5 and err.max() < 32
-
-
-def test_real_decode_jpeg_grayscale_and_flat():
-    """1-component scan; a flat image must decode (near-)exactly — DC-only
-    blocks, so quantization loses nothing."""
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    flat = np.full((16, 16), 200, dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(flat, quality=90))
-    assert out.shape == (16, 16)
-    assert np.abs(out.astype(int) - 200).max() <= 2
-
-    grad = (np.mgrid[0:9, 0:13][1] * 3).astype(np.uint8)
-    out2 = decode_jpeg(encode_jpeg(grad, quality=95))
-    assert np.abs(out2.astype(int) - grad.astype(int)).mean() < 4
-
-
-def test_real_decode_jpeg_tables_read_from_stream():
-    """The decoder must honor the stream's own DQT, not assumed tables:
-    encoding at two qualities yields different payload bytes that BOTH
-    decode within their own error bounds."""
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    y, x = np.mgrid[0:16, 0:16]
-    img = ((x * 16).astype(np.uint8)).astype(np.uint8)
-    lo, hi = encode_jpeg(img, quality=50), encode_jpeg(img, quality=95)
-    assert lo != hi
-    e_lo = np.abs(decode_jpeg(lo).astype(int) - img.astype(int)).mean()
-    e_hi = np.abs(decode_jpeg(hi).astype(int) - img.astype(int)).mean()
-    assert e_hi <= e_lo + 0.5  # finer quant never meaningfully worse
-
-
-def test_real_decode_jpeg_rejects_unsupported_variants():
-    """Disclosed coverage limits fail loudly: progressive SOF, truncated
-    entropy data, restart intervals."""
-    import struct
-
-    import numpy as np
-    import pytest
-
-    from casualty_linking_spark.operators.multimodal import decode_jpeg, encode_jpeg
-
-    img = np.zeros((8, 8), dtype=np.uint8)
-    enc = encode_jpeg(img)
-    # flip SOF0 (FFC0) to progressive SOF2 (FFC2)
-    prog = enc.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with pytest.raises(ValueError, match="baseline"):
-        decode_jpeg(prog)
-    # truncate mid-entropy
-    with pytest.raises(ValueError):
-        decode_jpeg(enc[: len(enc) // 2])
-    # inject a DRI segment right before SOS
-    sos_at = enc.find(b"\xff\xda")
-    dri = struct.pack(">HHH", 0xFFDD, 4, 8)
-    with pytest.raises(ValueError, match="restart"):
-        decode_jpeg(enc[:sos_at] + dri + enc[sos_at:])
-
-
-def test_real_decode_jpeg_dispatch():
-    import numpy as np
-
-    from casualty_linking_spark.operators.multimodal import decode_image, encode_jpeg
-
-    img = np.full((8, 8, 3), 128, dtype=np.uint8)
-    out = decode_image(encode_jpeg(img))
-    assert out is not None and out.shape == (8, 8, 3)
