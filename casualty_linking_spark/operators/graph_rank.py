@@ -19,9 +19,9 @@ on src (both sides hash-partitioned on the same key; at 100 TB the edge
 table is bucketed by src at write time so this is shuffle-free), one
 aggregation onto dst (map-side combine: integer sums), one left join back
 to the vertex set. Lineage is cut per round with a lazy localCheckpoint —
-same discipline as the person-linkage greedy rounds and the CC operator
-(its 3^rounds plan-growth lesson, commit 40366fb). Iterations are a fixed
-count, not convergence-tested: deterministic plans, bounded rounds.
+same discipline as the CC operator (commit 40366fb), so a round's plan does
+not embed every earlier round. Iterations are a fixed count, not
+convergence-tested: deterministic plans, bounded rounds.
 """
 
 from __future__ import annotations

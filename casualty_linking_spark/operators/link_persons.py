@@ -11,7 +11,9 @@ logistic-weight model over the same comparison fields — Jaro-Winkler for
 the String fields, exact-match for the non-fuzzy DateTime fields,
 set-intersection for the Custom fields (intersection_comparator), relative
 difference for rank_level (Price) — thresholded at 0.85 like the
-reference's threshold_ratio, followed by mutual-best-match and CC.
+reference's threshold_ratio, followed by greedy one-to-one matching
+(iterated mutual-best as one window chain). connected_components serves
+general graphs; the pipeline projects its matching's components.
 
 Plan shape (SURVEY §2.3 J7): **blocked** candidate join — block key =
 (first 3 chars of folded lower family name, death year). Never a cartesian
@@ -217,41 +219,40 @@ def _greedy_match(scored: DataFrame, rounds: int = 3) -> DataFrame:
     """Iterated mutual-best over (record_uri, actor_uri, score): each round
     keeps pairs that are their record's AND their actor's best remaining
     option (ties broken by partner URI), then removes both endpoints. The
-    union over rounds is a matching (every endpoint appears at most once) —
-    the property oracle_connected_components and Pipeline.run's projected
-    t4_components rely on."""
-    remaining = scored
-    matched = []
+    matches over all rounds are a matching (every endpoint appears at most
+    once), the property Pipeline.run's projected t4_components relies on.
+
+    One window chain over the pair rows: each row carries ``live`` (neither
+    endpoint matched yet) and ``hit`` (matched in some round), and a round
+    is four projections over the previous round's. Ordering ``live DESC``
+    first makes each window's first row a live one whenever the partition
+    has any, so the windows see exactly the remaining pairs. Every
+    projection reads only the one before it, so the plan reads ``scored``
+    once and grows linearly with ``rounds``: no round needs a lineage cut."""
+    cur = scored.selectExpr(
+        "record_uri", "actor_uri", "score", "true AS live", "false AS hit"
+    )
+    keep = ["record_uri", "actor_uri", "score", "live", "hit"]
     for _ in range(rounds):
-        # checkpoint per round: each m feeds the result union AND two
-        # anti-joins, and remaining(i+1) embeds remaining(i) through them —
-        # without the cut the logical plan grows 3^rounds (measured: rounds
-        # beyond ~8 hang in the optimizer on a 40-row input). The cut makes
-        # growth linear and computes each round's matching once. With AQE on
-        # (the session default), eager=False still runs the round's window
-        # shuffle as a job at this call, not in the first downstream job
-        # (ROADMAP item 7).
-        m = (
-            remaining.selectExpr(
-                "record_uri",
-                "actor_uri",
-                "row_number() OVER (PARTITION BY record_uri"
-                " ORDER BY score DESC, actor_uri ASC) AS rl",
-                "row_number() OVER (PARTITION BY actor_uri"
-                " ORDER BY score DESC, record_uri ASC) AS rr",
+        cur = (
+            cur.selectExpr(
+                *keep,
+                "live AND row_number() OVER (PARTITION BY record_uri"
+                " ORDER BY live DESC, score DESC, actor_uri) = 1 AS best_r",
             )
-            .where("rl = 1 AND rr = 1")
-            .select("record_uri", "actor_uri")
-            .localCheckpoint(eager=False)
+            .selectExpr(
+                *keep,
+                "best_r AND row_number() OVER (PARTITION BY actor_uri"
+                " ORDER BY live DESC, score DESC, record_uri) = 1 AS m",
+            )
+            .selectExpr("*", "max(m) OVER (PARTITION BY actor_uri) AS a_used")
+            .selectExpr(
+                "record_uri", "actor_uri", "score",
+                "live AND NOT a_used AND NOT max(m) OVER (PARTITION BY record_uri) AS live",
+                "hit OR m AS hit",
+            )
         )
-        matched.append(m)
-        remaining = remaining.join(
-            m.select("record_uri"), "record_uri", "left_anti"
-        ).join(m.select("actor_uri"), "actor_uri", "left_anti")
-    out = matched[0]
-    for m in matched[1:]:
-        out = out.unionByName(m)
-    return out
+    return cur.where("hit").select("record_uri", "actor_uri")
 
 
 def oversized_block_keys(
@@ -324,34 +325,25 @@ def link_persons(
         join_keys = ["bk"]
 
     pairs = left.join(right, join_keys).dropDuplicates(["record_uri", "actor_uri"])
-    # Lineage cut: every greedy-match round's windows and anti-joins
-    # reference `scored`; without the cut each round RE-RUNS the blocked
-    # candidate join + vectorized scoring (measured: the 100k-record eval
-    # multiplied the linkage cost several times over). eager=False does not
-    # defer the work here: with AQE on (the session default) the adaptive
-    # plan runs its shuffle stages at this call, so the join and scoring run
-    # as driver-side jobs before any stage write. Making the cut a written
-    # scored-pairs stage is ROADMAP item 7.
     scored = (
         score_pairs(pairs)
         .where(f"score >= {lit(threshold)}")
         .select("record_uri", "actor_uri", "score")
-        .localCheckpoint(eager=False)
     )
 
     # Iterated mutual-best match (3 rounds), deterministic tie-break on the
     # partner URI. One pass alone under-matches: when record X's top score
     # TIES between its true actor and a look-alike already claimed by its
-    # own record, X picks the look-alike (rl=1), the look-alike doesn't
-    # reciprocate (rr>1), and X matches nothing even though X's true actor's
-    # best IS X. Removing each round's matches and re-running is the
-    # distributed equivalent of the reference's greedy one-to-one matching
-    # (dedupe matchBlocks: take pairs by descending score, skipping used
-    # partners; src/linker.py:246) — a fixed 3 rounds resolves two-deep tie
+    # own record, X picks the look-alike, the look-alike doesn't
+    # reciprocate (its own record ranks first in its actor window), and X
+    # matches nothing even though X's true actor's best IS X. Removing each
+    # round's matches and re-running is the distributed equivalent of the
+    # reference's greedy one-to-one matching (dedupe matchBlocks: take pairs
+    # by descending score, skipping used partners; src/linker.py:246) — a
+    # fixed 3 rounds resolves two-deep tie
     # cascades, and residual ambiguity stays conservatively unmatched.
-    # Each round is two windows + two anti-joins over the post-threshold
-    # pair set (tiny vs the corpus); the cut above keeps rounds from
-    # rescoring.
+    # The rounds are windows over the one set of scored pairs, so the whole
+    # linkage is one lazy plan: it runs inside the caller's action.
     mutual = _greedy_match(scored, rounds=3)
     return mutual.selectExpr(
         *triple_exprs("record_uri", NS.CRM + "P70_documents", "actor_uri", "documents_links")

@@ -169,17 +169,18 @@ class Pipeline:
 
         person_links = None
         if self.actors is not None:
-            feats = self._stage(
-                "t4_features",
-                ["t2_records", "t3_rank_links", "t3_unit_links"],
-                lambda: casualty_features(
-                    t2, rank_links, unit_links,
-                    dims.dim_ranks(self.spark), dims.dim_municipalities(self.spark),
-                ),
-            )
+            # one lazy plan from the records to the links: scoring and the
+            # matching rounds run inside this stage's write
             person_links = self._stage(
-                "t4_person_links", ["t4_features"],
-                lambda: link_persons(feats, self.actors),
+                "t4_person_links",
+                ["t2_records", "t3_rank_links", "t3_unit_links"],
+                lambda: link_persons(
+                    casualty_features(
+                        t2, rank_links, unit_links,
+                        dims.dim_ranks(self.spark), dims.dim_municipalities(self.spark),
+                    ),
+                    self.actors,
+                ),
             )
             # the links are a matching (link_persons' greedy one-to-one
             # rounds), so each component is one link rooted at its lesser

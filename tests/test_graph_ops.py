@@ -211,6 +211,49 @@ def test_greedy_match_is_a_matching_under_ties(spark):
             assert set(got) <= {(r, a) for r, a, _ in pairs}, (name, rounds, got)
 
 
+def _mutual_best_rounds(pairs, rounds):
+    """Pure-Python iterated mutual-best: per round, a pair matches when it
+    is its record's best remaining pair (score desc, then actor URI) and
+    its actor's (score desc, then record URI); both endpoints then leave."""
+    live, out = list(pairs), set()
+    for _ in range(rounds):
+        best_rec, best_act = {}, {}
+        for rec, act, score in live:
+            if rec not in best_rec or (-score, act) < best_rec[rec][0]:
+                best_rec[rec] = ((-score, act), act)
+            if act not in best_act or (-score, rec) < best_act[act][0]:
+                best_act[act] = ((-score, rec), rec)
+        m = {(rec, act) for rec, act, _ in live
+             if best_rec[rec][1] == act and best_act[act][1] == rec}
+        out |= m
+        recs, acts = {r for r, _ in m}, {a for _, a in m}
+        live = [p for p in live if p[0] not in recs and p[1] not in acts]
+    return out
+
+
+def test_greedy_match_rounds_equal_reference_under_ties(spark):
+    """_greedy_match(rounds=r) equals the pure-Python iterated mutual-best
+    round for round, on tie-heavy inputs (scores drawn from five values,
+    no duplicate (record, actor) pair) where tie-breaking by partner URI and
+    the removal of matched endpoints decide the result."""
+    import random
+
+    from casualty_linking_spark.operators.link_persons import _greedy_match
+
+    for case in range(4):
+        rng = random.Random(11 + case)
+        scores = {}
+        for _ in range(50):
+            key = (f"rec{rng.randrange(10):02d}", f"act{rng.randrange(9):02d}")
+            scores[key] = rng.choice([0.86, 0.9, 0.93, 0.97, 1.0])
+        pairs = [(rec, act, s) for (rec, act), s in sorted(scores.items())]
+        sdf = spark.createDataFrame(pairs, "record_uri string, actor_uri string, score double")
+        for rounds in (1, 2, 3, 5):
+            got = {(r.record_uri, r.actor_uri) for r in _greedy_match(sdf, rounds=rounds).collect()}
+            want = _mutual_best_rounds(pairs, rounds)
+            assert got == want, (case, rounds, sorted(got ^ want))
+
+
 def test_constraint_violations_hand_graph(spark):
     """Planted violations: s1 has two distinct death dates (cardinality),
     s2 lacks the required death date (missing), duplicate identical triples

@@ -69,6 +69,10 @@ def test_extraction_stays_in_codegen(spark):
 
 
 def test_person_blocking_no_cartesian(spark):
+    """The person linkage is one lazy plan: blocked (no cartesian product),
+    built without running a Spark job, with no lineage cut (``Scan
+    ExistingRDD``) and with the scorer evaluated once, not once per
+    matching round."""
     from casualty_linking_spark import dims, synth
     from casualty_linking_spark.operators import extract, records as R
     from casualty_linking_spark.operators.link_persons import casualty_features, link_persons
@@ -85,8 +89,21 @@ def test_person_blocking_no_cartesian(spark):
     feats = casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
     spark.range(0).createOrReplaceTempView("_noop")  # keep session warm
     actors = synth.actors_from_sf(spark, "/root/testdata/sf0.001")
-    plan = _plan(link_persons(feats, actors))
+    sc = spark.sparkContext
+    group = "test_person_blocking_no_cartesian"
+    sc.setJobGroup(group, group)
+    try:
+        links = link_persons(feats, actors)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 0
+    plan = _plan(links)
     assert "CartesianProduct" not in plan
+    # one Python eval node runs the scorer (the records' name unification
+    # has its own)
+    evals = [line.strip() for line in plan.splitlines() if "EvalPython" in line]
+    assert sum("jaro_winkler_names" in line for line in evals) == 1, evals
+    assert "Scan ExistingRDD" not in plan, plan
 
 
 def test_dedup_grouping_skew_safe_no_window(spark):

@@ -5,9 +5,9 @@ Every py4j round trip costs the driver ~0.2 ms, and a tree of Column calls
 pays one per node — tens of thousands per Pipeline.run before the operators
 rendered their projections as SQL text. These counts depend only on the
 code (not on the host or the data size), so they are pinned as ceilings.
-Dimensions are inline VALUES tables, so no stage plan may scan an RDD of
-Python rows (``Scan ExistingRDD``); the only such scans left are the
-localCheckpoint lineage cuts of the person links.
+Dimensions are inline VALUES tables and the person linkage cuts no
+lineage, so no stage plan may scan an RDD (``Scan ExistingRDD``: Python rows
+or a localCheckpoint).
 
 A run must also leave nothing behind in the session (no cached plan), and
 the person tail's stage writes are pinned by their Spark job counts, which
@@ -47,6 +47,8 @@ from casualty_linking_spark.plans import pipeline, storage
 # eight VALUES tables costs 64 round trips per Pipeline. Generating all eight
 # person/event graphs in one projection took generate_persons to 181 / 181
 # and, with one generated frame instead of eight, union_graphs to 14 / 14.
+# The greedy matching as one window chain with no lineage cut took
+# link_persons to 273 / 257.
 CEILINGS = {
     "broadcast_dims": 100,
     "extract_mentions": 43,
@@ -57,14 +59,11 @@ CEILINGS = {
     "link_occupations": 180,
     "link_units": 300,
     "casualty_features": 140,
-    "link_persons": 450,
+    "link_persons": 273,
     "records_to_triples": 60,
     "generate_persons": 200,
     "union_graphs": 14,
 }
-# person linkage cuts its lineage with localCheckpoint: the scored pairs and
-# three matching rounds
-CHECKPOINT_STAGES = {"t4_person_links"}
 
 
 def _count_calls(spark, monkeypatch):
@@ -156,8 +155,7 @@ def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeyp
 
     assert "t5_triples" in plans and "t3_rank_links" in plans, sorted(plans)
     for stage, plan in plans.items():
-        if stage not in CHECKPOINT_STAGES:
-            assert "Scan ExistingRDD" not in plan, (stage, plan)
+        assert "Scan ExistingRDD" not in plan, (stage, plan)
     # the dimensions reach the plans as JVM-local relations
     assert "LocalTableScan" in plans["t3_rank_links"], plans["t3_rank_links"]
 
@@ -171,7 +169,11 @@ def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeyp
 #                   footer inference     CC round               the matching
 #   t4_components          22                   17                    1
 #   t5_triples             30                   14                   14
-JOB_CEILINGS = {"t4_components": 1, "t5_triples": 14}
+#
+# The person links were two stages, t4_features (6 jobs) and t4_person_links
+# (13, counting the jobs its localCheckpoint cuts ran at the call); as one
+# stage whose matching is one window chain they run 14.
+JOB_CEILINGS = {"t4_person_links": 14, "t4_components": 1, "t5_triples": 14}
 
 
 def test_pipeline_leaves_no_cache_and_stage_jobs_under_ceilings(spark, tmp_path, monkeypatch):
