@@ -4,8 +4,9 @@ src/converters.py:61-94 `convert_person_name`).
 Implemented as Arrow-batched pandas UDFs: the rule chains are regex rewrites
 plus Python ``str.title()`` — title-casing capitalizes after *any* non-letter
 (``'(ent. x)'.title()`` → ``'(Ent. X)'``), which Spark's ``initcap`` (word =
-whitespace-delimited) cannot reproduce, so exact parity requires the
-vectorized pandas path. No per-row Python at the Spark level.
+whitespace-delimited) cannot reproduce, so exact parity requires Python.
+Each chain is written once, as a scalar function; its pandas UDF maps that
+function over an Arrow batch. No per-row Python UDF at the Spark level.
 """
 
 from __future__ import annotations
@@ -19,8 +20,9 @@ from ..sqltext import lit
 
 
 def unify_family_py(family: str) -> str:
-    """Scalar mirror of unify_family_name (src/process.py:82-89); used by the
-    oracle-SQL renderer and golden tests."""
+    """unify_family_name's rule chain (src/process.py:82-89), one name at a
+    time; the pandas UDF maps it, and the oracle-SQL renderer and golden
+    tests call it directly."""
     f = re.sub(r"(\w)0(\w)", r"\1O\2", family or "")
     f = re.sub(r"\s+", " ", f)
     f = f.replace("%", "/")
@@ -29,35 +31,19 @@ def unify_family_py(family: str) -> str:
 
 
 def unify_given_py(given: str) -> str:
-    """Scalar mirror of unify_given_name (src/process.py:91-95)."""
+    """unify_given_name's rule chain (src/process.py:91-95), one name at a
+    time."""
     return (given or "").title().replace("%", "/")
-
-
-def _unify_family_series(s: pd.Series) -> pd.Series:
-    """Mirror of unify_family_name (src/process.py:82-89)."""
-    s = s.fillna("")
-    s = s.str.replace(r"(\w)0(\w)", r"\1O\2", regex=True)
-    s = s.str.replace(r"\s+", " ", regex=True)
-    s = s.str.replace("%", "/", regex=False)
-    s = s.str.replace(r"(\w\w\s+)(E(?:NT)?\.)\s?(\w+)", r"\1(ent. \3)", regex=True)
-    s = s.str.title().str.replace("(Ent.", "(ent.", regex=False).str.replace("Von", "von", regex=False)
-    return s
-
-
-def _unify_given_series(s: pd.Series) -> pd.Series:
-    """Mirror of unify_given_name (src/process.py:91-95)."""
-    s = s.fillna("")
-    return s.str.title().str.replace("%", "/", regex=False)
 
 
 @F.pandas_udf(T.StringType())
 def unify_family_name(s: pd.Series) -> pd.Series:
-    return _unify_family_series(s)
+    return s.fillna("").map(unify_family_py)
 
 
 @F.pandas_udf(T.StringType())
 def unify_given_name(s: pd.Series) -> pd.Series:
-    return _unify_given_series(s)
+    return s.fillna("").map(unify_given_py)
 
 
 _RE_NAME_SPLIT = re.compile(

@@ -16,7 +16,6 @@ XSD = "http://www.w3.org/2001/XMLSchema#"
 DATA_CAS = "http://ldf.fi/warsa/casualties/"
 SCHEMA_CAS = "http://ldf.fi/schema/warsa/casualties/"
 SCHEMA_WARSA = "http://ldf.fi/schema/warsa/"
-SCHEMA_ACTORS = "http://ldf.fi/schema/warsa/actors/"
 
 ACTORS = "http://ldf.fi/warsa/actors/"
 RANKS_NS = "http://ldf.fi/schema/warsa/actors/ranks/"
@@ -45,7 +44,6 @@ WINTER_WAR = CONFLICTS_NS + "WinterWar"
 CONTINUATION_WAR = CONFLICTS_NS + "ContinuationWar"
 RELATED_PERIOD = "http://ldf.fi/schema/warsa/events/related_period"
 HAS_RANK_PROP = "http://ldf.fi/schema/warsa/actors/hasRank"
-COVERNUMBER_PROP = "http://ldf.fi/schema/warsa/actors/covernumber"
 
 
 def cas(local: str) -> str:

@@ -8,13 +8,11 @@ UTF-8 bytes by an Arrow-batched pandas UDF (exactly DuckDB's
 jaro_winkler_similarity — the oracle runs the same formula).
 
 Plan shape: candidates must share the first character — a broadcast *hash*
-join on the first-char key (default), never a nested-loop cross join. At
-threshold 0.88 a first-char mismatch essentially never survives (JW weights
-the prefix), so blocking trades no recall on realistic data while cutting
-candidates 30-60x at the 10^4-label dictionary size; the full cross join
-remains available as an opt-in strict-parity mode (``block_first_char=False``
-mirrors the reference scoring every record against every label,
-src/linker.py:287-291).
+join on the first-char key, never a nested-loop cross join. At threshold
+0.88 a first-char mismatch essentially never survives (JW weights the
+prefix), so blocking trades no recall on realistic data while cutting
+candidates 30-60x at the 10^4-label dictionary size (the reference scores
+every record against every label, src/linker.py:287-291).
 """
 
 from __future__ import annotations
@@ -36,12 +34,7 @@ SCORE_THRESHOLD = 0.88
 _jaro_winkler_once = jaro_winkler.asNondeterministic()
 
 
-def link_occupations(
-    records: DataFrame,
-    occupations: DataFrame,
-    threshold: float = SCORE_THRESHOLD,
-    block_first_char: bool = True,
-) -> DataFrame:
+def link_occupations(records: DataFrame, occupations: DataFrame) -> DataFrame:
     """-> triples (record_uri, BIOC.has_occupation, occ_uri)."""
     recs = records.selectExpr("record_uri", "occupation_literal").where(
         "occupation_literal IS NOT NULL"
@@ -60,15 +53,12 @@ def link_occupations(
     # in the data, not by the ontology, so the task grows with the corpus's
     # dirt; sizing it from the data is ROADMAP item 3.
     lits = recs.select("occupation_literal").distinct().coalesce(1)
-    if block_first_char:
-        cond = F.expr("substring(occupation_literal, 1, 1) = substring(label, 1, 1)")
-        cands = lits.join(F.broadcast(occupations), cond)
-    else:
-        cands = lits.crossJoin(F.broadcast(occupations))
+    cond = F.expr("substring(occupation_literal, 1, 1) = substring(label, 1, 1)")
+    cands = lits.join(F.broadcast(occupations), cond)
 
     scored = cands.withColumn(
         "score", _jaro_winkler_once(F.col("occupation_literal"), F.col("label"))
-    ).where(f"score >= {lit(threshold)}")
+    ).where(f"score >= {lit(SCORE_THRESHOLD)}")
 
     best_per_lit = scored.selectExpr(
         "occupation_literal",

@@ -273,7 +273,6 @@ def oversized_block_keys(
 def link_persons(
     features: DataFrame,
     actors: DataFrame,
-    threshold: float = THRESHOLD,
     salt_buckets: int = 1,
     block_cap: int | None = None,
 ) -> DataFrame:
@@ -327,7 +326,7 @@ def link_persons(
     pairs = left.join(right, join_keys).dropDuplicates(["record_uri", "actor_uri"])
     scored = (
         score_pairs(pairs)
-        .where(f"score >= {lit(threshold)}")
+        .where(f"score >= {lit(THRESHOLD)}")
         .select("record_uri", "actor_uri", "score")
     )
 

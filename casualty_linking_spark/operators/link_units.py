@@ -116,13 +116,14 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
         F.expr("unit_code = cover_number"),
     )
     # score = edit-distance ratio on accent-folded raw label vs literal
-    # (reference: max fuzz.ratio over the unit's labels, src/linker.py:171)
+    # (reference: max fuzz.ratio over the unit's labels, src/linker.py:171).
+    # One argmax over the candidate rows: the best row's unit is the unit
+    # with the best per-unit maximum, under the same unit_uri tie-break.
     score = levenshtein_ratio(ascii_fold("label"), ascii_fold("unit_literal"))
-    per_unit = cands_a.groupBy("unit_code", "unit_literal", "unit_uri").agg(
-        F.expr(f"max({score}) AS score")
-    )
-    best_pair = per_unit.selectExpr(
-        "unit_code", "unit_literal", "unit_uri", "score",
+    best_pair = cands_a.selectExpr(
+        "unit_code", "unit_literal", "unit_uri", f"{score} AS score"
+    ).selectExpr(
+        "*",
         "row_number() OVER (PARTITION BY unit_code, unit_literal"
         " ORDER BY score DESC, unit_uri ASC) AS rn",
     ).where("rn = 1")
@@ -190,7 +191,7 @@ def link_units(records: DataFrame, unit_labels: DataFrame) -> tuple[DataFrame, D
     ).where("rn = 1")
 
     link_row = triple_exprs("record_uri", NS.cas("unit"), "unit_uri", "unit_links")
-    links = links_a.selectExpr(*link_row).unionByName(
-        best_b.selectExpr(*link_row)
-    ).dropDuplicates(["subj", "pred", "obj"])
+    # path A and path B take complementary records and each yields at most
+    # one link per record, so the union is already a set
+    links = links_a.selectExpr(*link_row).unionByName(best_b.selectExpr(*link_row))
     return links, period

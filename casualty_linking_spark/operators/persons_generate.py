@@ -33,9 +33,9 @@ from .. import namespaces as NS
 from ..functions.dates import date_cmp_str
 from ..sqltext import lit
 
-PERSON_URI_PREFIX = "http://ldf.fi/warsa/actors/person_"
-EVENT_PREFIX = "http://ldf.fi/warsa/events/"
-TIMES_PREFIX = "http://ldf.fi/warsa/events/times/"
+PERSON_URI_PREFIX = NS.ACTORS + "person_"
+EVENT_PREFIX = NS.EVENTS_NS
+TIMES_PREFIX = NS.TIMES_NS
 
 # every triple entry below is Spark SQL text; all eight graphs' entries
 # reach the JVM as one expression (see sqltext.py)

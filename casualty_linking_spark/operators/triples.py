@@ -1,7 +1,7 @@
 """T5 — triple materialization and graph-algebra primitives.
 
 The rdflib Graph IR of the reference becomes the triples DataFrame
-(schema.TRIPLES_SCHEMA). Graph union-with-dedup (src/linker.py:208,
+(seven columns, see schema.py). Graph union-with-dedup (src/linker.py:208,
 src/person_generator.py:221-228) is ``union_graphs``; pattern removal
 (src/linker.py:95-96, src/process.py:100,105) is ``remove_pattern``;
 the direct URI-object rewrites of src/process.py:22-43 are

@@ -3,20 +3,26 @@ idempotent partitioned table write with lineage + metrics, resumable per
 stage (the Spark re-expression of the reference's process.sh file-handoff
 DAG, SURVEY §3 — `process.sh:14-52` stage order preserved).
 
+T0 is the input table, read in place: the first stage written is
+``t1_mentions``. Every stage table is one lazy plan over the stage before
+it; none is a copy or a filter of another stage table.
+
 Resume model: a stage re-runs only when its fingerprint (code version +
-input-stage fingerprints) changed; otherwise its table is read back. Within
-a stage, writes use dynamic partition overwrite, so a re-run after partial
-failure replaces only the partitions it produces (Iceberg
-overwrite-by-partition semantics on parquet).
+input-stage fingerprints, or the input's identity for ``t1_mentions``)
+changed; otherwise its table is read back. Within a stage, writes use
+dynamic partition overwrite, so a re-run after partial failure replaces
+only the partitions it produces (Iceberg overwrite-by-partition semantics
+on parquet).
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from .. import dims, namespaces as NS
+from .. import dims
 from ..operators import extract, records as REC
 from ..operators.link_occupations import link_occupations
 from ..operators.link_persons import casualty_features, link_persons
@@ -124,10 +130,9 @@ class Pipeline:
     # -- stages --------------------------------------------------------------
 
     def run(self) -> DataFrame:
-        t0 = self._stage("t0_transcripts", [self._input_identity()], lambda: self.transcripts)
-
         t1 = self._stage(
-            "t1_mentions", ["t0_transcripts"], lambda: extract.extract_mentions(t0)
+            "t1_mentions", [self._input_identity()],
+            lambda: extract.extract_mentions(self.transcripts),
         )
         t2 = self._stage(
             "t2_records",
@@ -146,26 +151,12 @@ class Pipeline:
             "t3_occupation_links", ["t2_records"],
             lambda: link_occupations(t2, self.dims["occupations"]),
         )
-        # link_units produces BOTH unit links and related-period triples from
-        # one pass (path A's distinct-vocabulary fuzzy scoring is the most
-        # expensive linker stage); materialize the union once, then derive
-        # the two stage tables by predicate filter over the written parquet —
-        # unit linking executes exactly once per pipeline run. The two
-        # outputs are distinguishable by `pred` (cas:unit vs related_period).
-        unit_stage = self._stage(
-            "t3_unit_stage", ["t2_records"],
-            lambda: (lambda pair: pair[0].unionByName(pair[1]))(
-                link_units(t2, self.dims["unit_labels"])
-            ),
-        )
-        unit_links = self._stage(
-            "t3_unit_links", ["t3_unit_stage"],
-            lambda: unit_stage.filter(F.col("pred") != NS.RELATED_PERIOD),
-        )
-        periods = self._stage(
-            "t3_related_periods", ["t3_unit_stage"],
-            lambda: unit_stage.filter(F.col("pred") == NS.RELATED_PERIOD),
-        )
+        # one link_units plan feeds both unit tables, built only if a stage
+        # re-runs: path A (vocabulary-sized) runs in both writes, path B
+        # (the n-gram join over every record) in the unit-links write only
+        units = functools.cache(lambda: link_units(t2, self.dims["unit_labels"]))
+        unit_links = self._stage("t3_unit_links", ["t2_records"], lambda: units()[0])
+        periods = self._stage("t3_related_periods", ["t2_records"], lambda: units()[1])
 
         person_links = None
         if self.actors is not None:

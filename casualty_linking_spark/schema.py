@@ -2,8 +2,10 @@
 
 The triples DataFrame is the engine's graph IR: an rdflib Graph (a set of
 (s, p, o) triples — reference src/linker.py:208 relies on set-union
-semantics) becomes a DataFrame with set semantics enforced by
-``dropDuplicates(["subj", "pred", "obj"])`` at materialization time.
+semantics) becomes a DataFrame of seven columns (subj, pred, obj,
+obj_type, lang, datatype, graph_kind). ``operators.triples.union_graphs``
+enforces set semantics with ``dropDuplicates(TRIPLE_COLS)`` when the
+graphs are merged.
 """
 
 from pyspark.sql import types as T
@@ -19,32 +21,7 @@ TRANSCRIPTS_SCHEMA = T.StructType(
     ]
 )
 
-# obj_type: 'uri' | 'literal'; lang/datatype nullable literal annotations.
-TRIPLES_SCHEMA = T.StructType(
-    [
-        T.StructField("subj", T.StringType(), False),
-        T.StructField("pred", T.StringType(), False),
-        T.StructField("obj", T.StringType(), False),
-        T.StructField("obj_type", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("datatype", T.StringType(), True),
-        T.StructField("graph_kind", T.StringType(), True),
-    ]
-)
-
 TRIPLE_COLS = ["subj", "pred", "obj"]
-
-# Quarantine/error sidecar (replaces reference output/errors.csv,
-# src/csv_to_rdf.py:202-203; columns mirror ['nro','nimi','sarake','virhe','arvo']).
-ERRORS_SCHEMA = T.StructType(
-    [
-        T.StructField("person_id", T.StringType(), True),
-        T.StructField("name", T.StringType(), True),
-        T.StructField("column", T.StringType(), True),
-        T.StructField("error", T.StringType(), True),
-        T.StructField("value", T.StringType(), True),
-    ]
-)
 
 # driver-supplied telemetry stream table (TESTDATA.md: events.parquet)
 EVENTS_SCHEMA = T.StructType(

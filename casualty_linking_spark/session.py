@@ -111,10 +111,7 @@ def get_spark(
         # (weak keys), so a larger bound costs a few MB of metaspace and is
         # scale-independent: on a cluster each executor JVM wants its
         # generated classes to survive the whole job too.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     # AQE coalescing's "minimum partition worth scheduling" is byte-oriented
     # (default 1MB), which caps post-shuffle parallelism at totalBytes/1MB
@@ -126,10 +123,7 @@ def get_spark(
     # production shuffle sizes partitions exceed 1MB anyway, so the setting
     # is inert there — it only affects the small-shuffle regime where
     # parallelism, not partition size, is what matters.
-    builder = builder.config(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        os.environ.get("SPARK_GRAFT_AQE_MIN_PARTITION", "64k"),
-    )
+    builder = builder.config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 

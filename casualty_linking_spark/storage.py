@@ -1,6 +1,6 @@
 """Bucketed triples store — co-located joins without shuffle (100 TB posture).
 
-The engine's graph IR is a triples DataFrame (schema.TRIPLES_SCHEMA). Every
+The engine's graph IR is a triples DataFrame (see schema.py). Every
 SPARQL-idiom query (SURVEY §2.8) decomposes into self-joins of that table on
 ``subj`` or ``obj`` — e.g. the property-path walk P70_documents / ^P143_joined
 / P144_joined_with (reference unit_construct.sparql:8) is a 3-way self-join.

@@ -131,3 +131,37 @@ def test_phonetic_key_matches_duckdb_and_tolerates_vowel_typos(spark):
     assert got["Virtanen"] != got["Korhonen"]
     # every key carries the disjointness prefix
     assert all(k.startswith("P") for k in got.values())
+
+
+def _adversarial_names(n: int = 2000) -> list:
+    """Names built from the characters the unification rules react to."""
+    rng = random.Random(11)
+    pieces = [
+        "KORHONEN", "virtanen", "K0RH0NEN", "ENT.", "E.", "ent.", "VON", "von",
+        "%", "-", "'", "ä", "ö", "å", "Ä", "Ö", "Å", "ß", "ü", "9", "0", "(", ")",
+        " ", "  ", "o'brien", "MATTI-JUHANI", "d'ARTAGNAN", "ÅSTRÖM",
+    ]
+    names = [None, "", " ", "%", "-", "ß", "0", "VON  FIEANDT", "VIRTANEN ENT. LAHTI"]
+    while len(names) < n:
+        names.append("".join(rng.choice(pieces) for _ in range(rng.randint(1, 6))))
+    return names
+
+
+def test_name_unification_udfs_equal_the_scalar_rules(spark):
+    """The pandas UDFs the records stage runs give what the scalar rule
+    chains give, name for name, null and empty input included."""
+    from pyspark.sql import functions as F
+
+    from casualty_linking_spark.functions.names import (
+        unify_family_name, unify_family_py, unify_given_name, unify_given_py,
+    )
+
+    names = _adversarial_names()
+    df = spark.createDataFrame([(i, s) for i, s in enumerate(names)], "i int, s string")
+    got = df.select(
+        "i", unify_family_name(F.col("s")).alias("f"), unify_given_name(F.col("s")).alias("g")
+    ).collect()
+    assert len(got) == len(names)
+    for r in got:
+        assert r.f == unify_family_py(names[r.i]), names[r.i]
+        assert r.g == unify_given_py(names[r.i]), names[r.i]

@@ -9,9 +9,11 @@ Dimensions are inline VALUES tables and the person linkage cuts no
 lineage, so no stage plan may scan an RDD (``Scan ExistingRDD``: Python rows
 or a localCheckpoint).
 
-A run must also leave nothing behind in the session (no cached plan), and
-the person tail's stage writes are pinned by their Spark job counts, which
-are as deterministic as the round trips. The components stage is one
+A run must also leave nothing behind in the session (no cached plan), it
+must write exactly the pipeline's stage tables (the input is read in place
+and no stage table is a copy or a filter of another), and the linker and
+person-tail stage writes are pinned by their Spark job counts, which are as
+deterministic as the round trips. The components stage is one
 projection of the person links, checked here against the general
 connected-components operator.
 """
@@ -33,9 +35,9 @@ from casualty_linking_spark.plans import pipeline, storage
 #   mentions_to_raw_records         605 / 95           26 / 26
 #   build_records                  4238 / 508         196 / 164
 #   record_errors                  1382 / 1382          8 / 8
-#   link_ranks                      379 / 127          69 / 69
+#   link_ranks                      379 / 127          69 / 69   -> 35 / 35
 #   link_occupations                445 / 427         122 / 106
-#   link_units                     1821 / 605         197 / 197
+#   link_units                     1821 / 605         197 / 197 -> 170 / 170
 #   casualty_features               422 / 422          93 / 93
 #   link_persons                   4683 / 4683        297 / 281
 #   records_to_triples             4795 / 106          31 / 31
@@ -48,16 +50,19 @@ from casualty_linking_spark.plans import pipeline, storage
 # person/event graphs in one projection took generate_persons to 181 / 181
 # and, with one generated frame instead of eight, union_graphs to 14 / 14.
 # The greedy matching as one window chain with no lineage cut took
-# link_persons to 273 / 257.
+# link_persons to 273 / 257. Resolving ranks on the dimension (no vocabulary
+# pass) took link_ranks to 35 / 35; one argmax window and no dedup in path A,
+# with link_units built once per run for both unit tables, took link_units
+# to 170 / 170 (building it for each unit table would double that).
 CEILINGS = {
     "broadcast_dims": 100,
     "extract_mentions": 43,
     "mentions_to_raw_records": 40,
     "build_records": 300,
     "record_errors": 20,
-    "link_ranks": 100,
+    "link_ranks": 35,
     "link_occupations": 180,
-    "link_units": 300,
+    "link_units": 170,
     "casualty_features": 140,
     "link_persons": 273,
     "records_to_triples": 60,
@@ -173,7 +178,24 @@ def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeyp
 # The person links were two stages, t4_features (6 jobs) and t4_person_links
 # (13, counting the jobs its localCheckpoint cuts ran at the call); as one
 # stage whose matching is one window chain they run 14.
-JOB_CEILINGS = {"t4_person_links": 14, "t4_components": 1, "t5_triples": 14}
+#
+# The linker stages: t3_rank_links ran 4 jobs with a vocabulary pass and
+# runs 3 resolved on the dimension. The unit tables were a union stage
+# (10 jobs) plus two filter re-writes (1 + 1); written from one link_units
+# plan they run 8 (unit links) and 4 (related periods).
+JOB_CEILINGS = {
+    "t3_rank_links": 3,
+    "t3_unit_links": 8,
+    "t3_related_periods": 4,
+    "t4_person_links": 14,
+    "t4_components": 1,
+    "t5_triples": 14,
+}
+# a run with actors writes these and nothing else (besides metrics/)
+STAGE_TABLES = [
+    "t1_mentions", "t2_errors", "t2_records", "t3_occupation_links", "t3_rank_links",
+    "t3_related_periods", "t3_unit_links", "t4_components", "t4_person_links", "t5_triples",
+]
 
 
 def test_pipeline_leaves_no_cache_and_stage_jobs_under_ceilings(spark, tmp_path, monkeypatch):
@@ -197,7 +219,9 @@ def test_pipeline_leaves_no_cache_and_stage_jobs_under_ceilings(spark, tmp_path,
     jobs = []
     for i in range(2):
         groups.clear()
-        pipeline.Pipeline(spark, str(tmp_path / f"run{i}"), transcripts, actors=actors).run()
+        root = tmp_path / f"run{i}"
+        pipeline.Pipeline(spark, str(root), transcripts, actors=actors).run()
+        assert sorted(p.name for p in root.iterdir()) == ["metrics"] + STAGE_TABLES
         tracker = sc.statusTracker()
         jobs.append({n: len(tracker.getJobIdsForGroup(g)) for n, g in groups})
         # nothing the run built outlives it in the session
