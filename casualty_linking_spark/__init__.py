@@ -6,7 +6,7 @@ for behavior only; architecture is idiomatic Spark DataFrame/SQL).
 Pipeline stages (SURVEY.md §7.1):
 
     T0 transcripts  (conv_id, turn_idx, role, text, tool, ts)
-    T1 mentions     vectorized extraction of casualty-record fields per turn
+    T1 mentions     extraction of casualty-record fields per turn (inside the T2 write)
     T2 records      wide silver record per casualty + converters + validators
     T3 links        rank / unit / municipality / occupation entity linking
     T4 person_links blocked record-linkage + one-to-one matching; one component per link

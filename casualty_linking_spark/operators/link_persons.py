@@ -270,17 +270,19 @@ def oversized_block_keys(
     )
 
 
-def link_persons(
+def candidate_pairs(
     features: DataFrame,
     actors: DataFrame,
     salt_buckets: int = 1,
     block_cap: int | None = None,
 ) -> DataFrame:
-    """Blocked candidate join + logistic scoring + mutual-best-match.
-    -> triples (record_uri, CRM.P70_documents, actor_uri).
+    """Blocked candidate join: every (record, actor) pair sharing at least
+    one block key, once per pair, with the record's feature columns, the
+    actor side renamed ``a_*`` (:func:`score_pairs`' column contract) and
+    one shared ``bk``.
 
     ``block_cap`` (off by default — semantics identical to the uncapped
-    operator) drops block keys whose candidate-pair count would exceed the
+    join) drops block keys whose candidate-pair count would exceed the
     cap BEFORE the pair join. This is the explicit guard for the failure
     mode measured in BENCH/LINK_PR.md: a low-cardinality name vocabulary
     makes pair counts quadratic in corpus size (13.2M pairs at 20k synth
@@ -290,7 +292,7 @@ def link_persons(
     (src/linker.py Lucene-based candidate search); here the truncation is
     explicit, deterministic, and observable via :func:`oversized_block_keys`
     (log it, alert on it, or route dropped blocks to a finer key). A record
-    participating in several keys still links through its surviving keys."""
+    participating in several keys still pairs through its surviving keys."""
     left = features.selectExpr(
         "*", f"explode({_block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
     )
@@ -323,9 +325,20 @@ def link_persons(
     else:
         join_keys = ["bk"]
 
-    pairs = left.join(right, join_keys).dropDuplicates(["record_uri", "actor_uri"])
+    return left.join(right, join_keys).dropDuplicates(["record_uri", "actor_uri"])
+
+
+def link_persons(
+    features: DataFrame,
+    actors: DataFrame,
+    salt_buckets: int = 1,
+    block_cap: int | None = None,
+) -> DataFrame:
+    """Blocked candidate join + logistic scoring + mutual-best-match.
+    -> triples (record_uri, CRM.P70_documents, actor_uri).
+    ``salt_buckets`` and ``block_cap``: see :func:`candidate_pairs`."""
     scored = (
-        score_pairs(pairs)
+        score_pairs(candidate_pairs(features, actors, salt_buckets, block_cap))
         .where(f"score >= {lit(THRESHOLD)}")
         .select("record_uri", "actor_uri", "score")
     )
@@ -384,91 +397,28 @@ def _small_star(edges_ab: DataFrame) -> DataFrame:
     return nbrs.unionByName(selfs).filter(F.col("a") != F.col("b")).distinct()
 
 
-def connected_components(
-    edges: DataFrame, max_iter: int = 50, algorithm: str = "star"
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """Canonicalize sameAs/link closures (the GraphFrames-free CC of SURVEY
     §4.3). edges(src, dst) undirected. Returns (vertex, component) with
     component = min vertex id (lexicographic) of the connected component.
+    (The pipeline's person links are a matching, so ``Pipeline.run``
+    projects their components instead.)
 
-    algorithm='star' (default): alternating large-star/small-star rounds
-    (Kiveris et al. 2014) — O(log n) rounds on ANY graph shape, so a
-    10^12-scale closure with long chains converges without a
-    diameter-bounded loop. Each round is two keyed aggregations + joins,
-    all map-side combinable; convergence = the undirected edge set reached
-    a fixed point (star graphs rooted at component minima).
-
-    algorithm='label': the original iterative min-label propagation —
-    O(graph diameter) iterations; only the tests call it, as the
-    cross-check of 'star'. (The pipeline's person links are a matching, so
-    their components need neither: ``Pipeline.run`` projects them.)
-
-    Both raise on non-convergence at max_iter rather than silently
-    returning split components. Each iteration localCheckpoints to cut the
-    lineage (a cluster job would checkpoint to the cluster store)."""
-    if algorithm == "star":
-        return _connected_components_star(edges, max_iter)
-    if algorithm != "label":
-        raise ValueError(f"unknown CC algorithm: {algorithm!r}")
-    # cut lineage first: without it every iteration's join re-executes the
-    # whole upstream linkage chain that produced the edges
-    edges = edges.select("src", "dst").localCheckpoint(eager=True)
-    sym = edges.unionByName(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct().localCheckpoint(eager=True)
-    comp = (
-        sym.select(F.col("src").alias("vertex"))
-        .distinct()
-        .withColumn("component", F.col("vertex"))
-    )
-    changed = 0
-    for _ in range(max_iter):
-        # candidate component per vertex: min over neighbors' components
-        nbr = (
-            sym.join(comp, sym.dst == comp.vertex)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_comp"))
-            .withColumnRenamed("src", "vertex")
-        )
-        new_comp = (
-            comp.join(nbr, "vertex", "left")
-            .select(
-                "vertex",
-                F.least(F.col("component"), F.coalesce("nbr_comp", F.col("component"))).alias(
-                    "component"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_comp.alias("n")
-            .join(comp.alias("o"), "vertex")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        comp = new_comp
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            f"({changed} labels still changing) — graph diameter exceeds "
-            f"max_iter; raise max_iter or switch to large-star/small-star"
-        )
-    return comp
-
-
-def _connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """Alternating large-star/small-star fixed point. At convergence the
-    edge set is a union of stars (child, root) with root = the component's
-    minimum vertex; the vertex table is recovered as children ∪ roots ∪
-    isolated input vertices (a degenerate input edge (v, v) yields a
-    single-vertex component).
+    Alternating large-star/small-star rounds (Kiveris et al. 2014) —
+    O(log n) rounds on ANY graph shape, so a 10^12-scale closure with long
+    chains converges without a diameter-bounded loop. Each round is two
+    keyed aggregations + joins, all map-side combinable. At the fixed point
+    (the undirected edge set stops changing) the edge set is a union of
+    stars (child, root) with root = the component's minimum vertex; the
+    vertex table is recovered as children ∪ roots ∪ isolated input vertices
+    (a degenerate input edge (v, v) yields a single-vertex component).
+    Raises on non-convergence at max_iter rather than silently returning
+    split components.
 
     One cut per round: the input edges are cut once (every later plan reads
     them), each round's edge set is cut once, and the fixed-point test is a
     single job; the vertex set and the first round's edges are lazy over
-    the input cut."""
+    the input cut (a cluster job would checkpoint to the cluster store)."""
     e0 = edges.select("src", "dst").localCheckpoint(eager=True)
     verts = (
         e0.select(F.col("src").alias("vertex"))
@@ -499,7 +449,7 @@ def _connected_components_star(edges: DataFrame, max_iter: int = 50) -> DataFram
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components(star) did not reach a fixed point in "
+            f"connected_components did not reach a fixed point in "
             f"{max_iter} rounds — this is O(log n) rounds by construction; "
             f"raise max_iter"
         )

@@ -3,13 +3,16 @@ idempotent partitioned table write with lineage + metrics, resumable per
 stage (the Spark re-expression of the reference's process.sh file-handoff
 DAG, SURVEY §3 — `process.sh:14-52` stage order preserved).
 
-T0 is the input table, read in place: the first stage written is
-``t1_mentions``. Every stage table is one lazy plan over the stage before
-it; none is a copy or a filter of another stage table.
+T0 is the input table, read in place, and the first stage written is
+``t2_records``: mention extraction (T1) runs inside its write, so no
+per-turn table is materialized. Every stage table is one lazy plan over
+the stages before it; none is a copy or a filter of another stage table.
 
 Resume model: a stage re-runs only when its fingerprint (code version +
-input-stage fingerprints, or the input's identity for ``t1_mentions``)
-changed; otherwise its table is read back. Within a stage, writes use
+input-stage fingerprints, plus the identity of an input table it reads:
+the transcripts for ``t2_records``, the actors for ``t4_person_links``,
+the curated additions for ``t5_triples``) changed; otherwise its table is
+read back. Within a stage, writes use
 dynamic partition overwrite, so a re-run after partial failure replaces
 only the partitions it produces (Iceberg overwrite-by-partition semantics
 on parquet).
@@ -130,14 +133,14 @@ class Pipeline:
     # -- stages --------------------------------------------------------------
 
     def run(self) -> DataFrame:
-        t1 = self._stage(
-            "t1_mentions", [self._input_identity()],
-            lambda: extract.extract_mentions(self.transcripts),
-        )
+        # the records are built straight from the transcripts (the
+        # reference reads the register and builds its records in one pass,
+        # src/csv_to_rdf.py:138-191): no per-turn mention table is written
         t2 = self._stage(
-            "t2_records",
-            ["t1_mentions"],
-            lambda: REC.build_records(extract.mentions_to_raw_records(t1)),
+            "t2_records", [self._input_identity()],
+            lambda: REC.build_records(
+                extract.mentions_to_raw_records(extract.extract_mentions(self.transcripts))
+            ),
         )
         self._stage(
             "t2_errors", ["t2_records"], lambda: REC.record_errors(t2),
@@ -161,10 +164,13 @@ class Pipeline:
         person_links = None
         if self.actors is not None:
             # one lazy plan from the records to the links: scoring and the
-            # matching rounds run inside this stage's write
+            # matching rounds run inside this stage's write. The actors'
+            # identity joins the fingerprint: a new actors table re-links
+            # instead of reading back the links of the old one
             person_links = self._stage(
                 "t4_person_links",
-                ["t2_records", "t3_rank_links", "t3_unit_links"],
+                ["t2_records", "t3_rank_links", "t3_unit_links",
+                 "actors:" + self._input_identity(self.actors)],
                 lambda: link_persons(
                     casualty_features(
                         t2, rank_links, unit_links,
@@ -216,7 +222,8 @@ class Pipeline:
 
         triples = self._stage(
             "t5_triples",
-            ["t2_records", "t3_rank_links", "t3_occupation_links", "t3_unit_links"]
+            ["t2_records", "t3_rank_links", "t3_occupation_links", "t3_unit_links",
+             "t3_related_periods"]
             + (["t4_person_links"] if person_links is not None else [])
             + extra_inputs,
             lambda: union_graphs(*graphs),

@@ -913,14 +913,19 @@ def _features_ctes() -> list[str]:
     )
 
 
-def q_person_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+def sf_casualty_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The person linker's casualty side at ``sf_dir``: one feature row per
+    silver record (``link_persons.casualty_features``)."""
     from .operators.link_persons import casualty_features
 
     rec = build_silver(spark, sf_dir)
     rl = link_ranks(rec, dims.dim_rank_labels(spark))
     ul, _ = link_units(rec, dims.dim_unit_labels(spark))
-    feats = casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
-    return feats.select(
+    return casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
+
+
+def q_person_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return sf_casualty_features(spark, sf_dir).select(
         "record_uri", "given", "family", "birth_iso", "death_iso",
         F.coalesce(F.element_at("rank", 1), F.lit(None)).alias("rank_uri"),
         "rank_level",
@@ -1057,14 +1062,10 @@ def _mutual_round_ctes(rounds: int) -> list[str]:
 
 
 def q_link_persons(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.link_persons import casualty_features, link_persons
+    from .operators.link_persons import link_persons
 
-    rec = build_silver(spark, sf_dir)
-    rl = link_ranks(rec, dims.dim_rank_labels(spark))
-    ul, _ = link_units(rec, dims.dim_unit_labels(spark))
-    feats = casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
-    actors = synth.actors_from_sf(spark, sf_dir)
-    return link_persons(feats, actors).select("subj", "pred", "obj")
+    feats = sf_casualty_features(spark, sf_dir)
+    return link_persons(feats, synth.actors_from_sf(spark, sf_dir)).select("subj", "pred", "obj")
 
 
 def q_link_pr(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,9 +6,9 @@ model on the seed pairs of input/person_links.json; threshold_ratio 0.85).
 
 Protocol (every step deterministic — no RNG anywhere):
 
-1. Candidate pairs: replicate the production blocked join
-   (operators/link_persons.link_persons) at --sf-dir and compute the exact
-   8 inference-time comparison features (score_pairs) for every candidate.
+1. Candidate pairs: the production blocked join
+   (operators/link_persons.candidate_pairs) at --sf-dir and the exact 8
+   inference-time comparison features (score_pairs) for every candidate.
 2. Labelled sample: records with even pid are the training half (the
    reference likewise trains on pairs drawn from the corpus it links);
    their planted ground truth labels true pairs, same-pid decoy actors are
@@ -66,38 +66,16 @@ def candidate_frame(spark, sf_dir: str) -> pd.DataFrame:
     """All blocked candidate pairs with inference-time features + truth."""
     from pyspark.sql import functions as F
 
-    from casualty_linking_spark import dims, synth
+    from casualty_linking_spark import synth
+    from casualty_linking_spark.eval_pr import truth_actor_uri
     from casualty_linking_spark.operators import link_persons as LP
-    from casualty_linking_spark.operators.link_ranks import link_ranks
-    from casualty_linking_spark.operators.link_units import link_units
-    from casualty_linking_spark.queries import build_silver
+    from casualty_linking_spark.queries import sf_casualty_features
 
-    rec = build_silver(spark, sf_dir)
-    rl = link_ranks(rec, dims.dim_rank_labels(spark))
-    ul, _ = link_units(rec, dims.dim_unit_labels(spark))
-    feats = LP.casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
+    feats = sf_casualty_features(spark, sf_dir)
     actors = synth.actors_from_sf(spark, sf_dir)
-
-    left = feats.selectExpr(
-        "*", f"explode({LP._block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
-    )
-    right = actors.select(
-        "actor_uri", F.col("given").alias("a_given"), F.col("family").alias("a_family"),
-        F.col("birth_iso").alias("a_birth"), F.col("death_iso").alias("a_death"),
-        F.col("rank_uri").alias("a_rank"), F.col("rank_level").alias("a_rank_level"),
-        F.col("unit_uri").alias("a_unit"), F.col("birth_place").alias("a_place"),
-    )
-    a_keys = LP._block_keys("a_family", "a_death", "a_birth", "a_given", name_only_always=True)
-    right = right.selectExpr("*", f"explode({a_keys}) AS bk")
-    pairs = left.join(right, "bk").dropDuplicates(["record_uri", "actor_uri"])
     pid = F.regexp_extract("record_uri", r"p(\d+)$", 1).cast("bigint")
-    out = LP.score_pairs(pairs).withColumn("pid", pid).withColumn(
-        "is_true",
-        (
-            (F.col("pid") % 4 != 3)
-            & (F.col("actor_uri") == F.concat(
-                F.lit("http://ldf.fi/warsa/actors/person_a"), F.col("pid").cast("string")))
-        ).cast("int"),
+    out = LP.score_pairs(LP.candidate_pairs(feats, actors)).withColumn("pid", pid).withColumn(
+        "is_true", F.expr(f"CAST(coalesce(actor_uri = {truth_actor_uri('pid')}, false) AS INT)")
     )
     return out.select("record_uri", "actor_uri", "pid", "is_true", *FEATURES).toPandas()
 
@@ -169,34 +147,20 @@ def fit_boosted(D, Xcls, ycls):
 def evaluate(spark, sf_dir: str, weights: dict[str, float], bias: float):
     """P/R of the REAL linker (blocking + scoring + mutual-best) vs planted
     truth, with the candidate weights patched in."""
-    from pyspark.sql import functions as F
-
-    from casualty_linking_spark import dims, synth
+    from casualty_linking_spark import eval_pr
+    from casualty_linking_spark import queries as Q
     from casualty_linking_spark.operators import link_persons as LP
-    from casualty_linking_spark.operators.link_ranks import link_ranks
-    from casualty_linking_spark.operators.link_units import link_units
-    from casualty_linking_spark.queries import build_silver
 
     old_w, old_b = dict(LP.WEIGHTS), LP.BIAS
     LP.WEIGHTS.clear()
     LP.WEIGHTS.update(weights)
     LP.BIAS = bias
     try:
-        rec = build_silver(spark, sf_dir)
-        rl = link_ranks(rec, dims.dim_rank_labels(spark))
-        ul, _ = link_units(rec, dims.dim_unit_labels(spark))
-        feats = LP.casualty_features(rec, rl, ul, dims.dim_ranks(spark), dims.dim_municipalities(spark))
-        actors = synth.actors_from_sf(spark, sf_dir)
-        links = LP.link_persons(feats, actors)
-        got = {(r.subj, r.obj) for r in links.select("subj", "obj").collect()}
-        pid = F.regexp_extract("record_uri", r"p(\d+)$", 1).cast("bigint")
-        truth_df = feats.select(pid.alias("pid"), "record_uri").filter(F.col("pid") % 4 != 3)
-        truth = {
-            (r.record_uri, f"http://ldf.fi/warsa/actors/person_a{r.pid}")
-            for r in truth_df.collect()
-        }
-        tp = len(got & truth)
-        return (tp / len(got) if got else 0.0), (tp / len(truth) if truth else 0.0)
+        r = eval_pr.evaluate_linker(
+            Q.q_link_persons(spark, sf_dir),
+            eval_pr.truth_frame(Q.build_silver(spark, sf_dir), "persons"),
+        )
+        return r["precision"], r["recall"]
     finally:
         LP.WEIGHTS.clear()
         LP.WEIGHTS.update(old_w)

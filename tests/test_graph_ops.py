@@ -82,27 +82,23 @@ def _cc_py(pairs):
 
 def _cc_check(spark, pairs, max_iter=50):
     edges = spark.createDataFrame(pairs, "src string, dst string")
-    want = _cc_py(pairs)
-    star = {r.vertex: r.component
-            for r in connected_components(edges, max_iter, "star").collect()}
-    label = {r.vertex: r.component
-             for r in connected_components(edges, max_iter, "label").collect()}
-    assert star == want
-    assert label == want
+    got = {r.vertex: r.component
+           for r in connected_components(edges, max_iter).collect()}
+    assert got == _cc_py(pairs)
 
 
-def test_cc_star_path_graph_beyond_label_diameter(spark):
-    # 12-hop path: label propagation needs ~12 iterations, star needs O(log);
-    # run star alone with max_iter=6 to prove the round bound actually holds
+def test_cc_star_path_graph_within_log_rounds(spark):
+    # 12-hop path: a diameter-bounded closure would need ~12 rounds, star
+    # needs O(log); max_iter=6 proves the round bound actually holds
     pairs = [(f"v{i:02d}", f"v{i+1:02d}") for i in range(12)]
     edges = spark.createDataFrame(pairs, "src string, dst string")
     star = {r.vertex: r.component
-            for r in connected_components(edges, 6, "star").collect()}
+            for r in connected_components(edges, 6).collect()}
     assert star == {f"v{i:02d}": "v00" for i in range(13)}
     _cc_check(spark, pairs)
 
 
-def test_cc_star_random_graphs_match_label_and_union_find(spark):
+def test_cc_star_random_graphs_match_union_find(spark):
     # deterministic pseudo-random multi-component graphs (LCG — no RNG
     # seeding concerns), incl. duplicate edges, reversed dups and self-loops
     state = 123456789

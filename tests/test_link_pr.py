@@ -57,3 +57,24 @@ def test_no_spurious_links_on_no_target_records(spark):
     r = _eval(spark)
     assert r["occupations"]["spurious_on_no_target"] == 0
     assert r["persons"]["spurious_on_no_target"] == 0
+
+
+def test_blocking_keeps_every_planted_pair_once(spark):
+    """Blocking recall on its own: every planted true (record, actor) pair
+    is a candidate of the blocked join, exactly once. End P/R alone would
+    hide a blocking miss that the scorer and the matching never needed."""
+    from collections import Counter
+
+    from casualty_linking_spark import queries as Q, synth
+    from casualty_linking_spark.operators.link_persons import candidate_pairs
+
+    pairs = candidate_pairs(
+        Q.sf_casualty_features(spark, SF_DIR), synth.actors_from_sf(spark, SF_DIR)
+    )
+    seen = Counter(tuple(r) for r in pairs.select("record_uri", "actor_uri").collect())
+    truth = eval_pr.truth_frame(Q.build_silver(spark, SF_DIR), "persons")
+    planted = [tuple(r) for r in truth.where("true_obj IS NOT NULL").select(
+        "record_uri", "true_obj").collect()]
+    assert planted
+    missed = [p for p in planted if seen[p] != 1]
+    assert not missed, missed

@@ -10,8 +10,9 @@ lineage, so no stage plan may scan an RDD (``Scan ExistingRDD``: Python rows
 or a localCheckpoint).
 
 A run must also leave nothing behind in the session (no cached plan), it
-must write exactly the pipeline's stage tables (the input is read in place
-and no stage table is a copy or a filter of another), and the linker and
+must write exactly the pipeline's stage tables (the input is read in place,
+the records are built straight from it with no per-turn mention table, and
+no stage table is a copy or a filter of another), and the linker and
 person-tail stage writes are pinned by their Spark job counts, which are as
 deterministic as the round trips. The components stage is one
 projection of the person links, checked here against the general
@@ -193,7 +194,7 @@ JOB_CEILINGS = {
 }
 # a run with actors writes these and nothing else (besides metrics/)
 STAGE_TABLES = [
-    "t1_mentions", "t2_errors", "t2_records", "t3_occupation_links", "t3_rank_links",
+    "t2_errors", "t2_records", "t3_occupation_links", "t3_rank_links",
     "t3_related_periods", "t3_unit_links", "t4_components", "t4_person_links", "t5_triples",
 ]
 
@@ -241,7 +242,5 @@ def test_closed_form_components_equal_the_general_operator(spark, tmp_path):
     links = spark.read.parquet(str(root / "t4_person_links"))
     assert links.count() > 0
     got = sorted(spark.read.parquet(str(root / "t4_components")).collect())
-    edges = links.selectExpr("subj AS src", "obj AS dst")
-    for algorithm in ("star", "label"):
-        want = sorted(connected_components(edges, algorithm=algorithm).collect())
-        assert got == want, algorithm
+    want = sorted(connected_components(links.selectExpr("subj AS src", "obj AS dst")).collect())
+    assert got == want

@@ -152,6 +152,50 @@ def test_pipeline_additions_merge(spark, tmp_path):
     assert t5b.filter(F.col("subj") == "http://x/p2").count() == 1
 
 
+def test_pipeline_resume_rebuilds_what_a_new_input_reaches(spark, tmp_path, monkeypatch):
+    """On one root, a stage is read back exactly when nothing it reads
+    changed: identical inputs read back every stage; a new actors table
+    rebuilds the person links, their components and the triples while the
+    records and the t3 links are read back; new transcripts rebuild every
+    stage. A stale read-back here would keep links to actors that are gone."""
+    from casualty_linking_spark import synth
+    from casualty_linking_spark.plans import pipeline, storage
+
+    written: set[str] = set()
+    write = storage.write_table
+
+    def recording(df, path, *a, **k):
+        written.add(path.rstrip("/").rsplit("/", 1)[-1])
+        return write(df, path, *a, **k)
+
+    monkeypatch.setattr(storage, "write_table", recording)
+    root = str(tmp_path / "pipe")
+
+    def run(transcripts, actors) -> set[str]:
+        written.clear()
+        pipeline.Pipeline(spark, root, transcripts, actors=actors).run()
+        return set(written)
+
+    transcripts = synth.transcripts_range(spark, 40)
+    actors = synth.actors_range(spark, 40)
+    every = {
+        "t2_records", "t2_errors", "t3_rank_links", "t3_occupation_links",
+        "t3_unit_links", "t3_related_periods", "t4_person_links", "t4_components",
+        "t5_triples",
+    }
+    assert run(transcripts, actors) == every
+    assert run(transcripts, actors) == set()
+
+    # half the actors: only what reads the actors is rebuilt
+    fewer = actors.where("pmod(xxhash64(actor_uri), 2) = 0")
+    kept = {r.actor_uri for r in fewer.select("actor_uri").collect()}
+    assert run(transcripts, fewer) == {"t4_person_links", "t4_components", "t5_triples"}
+    links = spark.read.parquet(f"{root}/t4_person_links").collect()
+    assert links and {r.obj for r in links} <= kept
+
+    assert run(synth.transcripts_range(spark, 30), fewer) == every
+
+
 def test_additions_identity_is_content_based(spark, tmp_path):
     """The additions fingerprint must hash CONTENT even for file-backed
     sources: the curated Turtle file is hand-edited in place, so its file
