@@ -36,7 +36,7 @@ def main() -> None:
     from casualty_linking_spark import dims, synth
     from casualty_linking_spark.operators import extract, records as R
     from casualty_linking_spark.operators.link_persons import (
-        _block_keys,
+        blocked_sides,
         casualty_features,
         link_persons,
     )
@@ -72,18 +72,10 @@ def main() -> None:
     actors = skew(actors, "actor_uri", "family", "death_iso").localCheckpoint(eager=True)
 
     # biggest single join key's candidate-pair count (the work the largest
-    # reduce task would carry), per salt setting
+    # reduce task would carry), per salt setting, on link_persons' own
+    # blocked sides
     def max_key_pairs(salt_buckets: int) -> int:
-        keys = _block_keys("family", "death_iso", "birth_iso")
-        left = feats.selectExpr("*", f"explode({keys}) AS bk")
-        right = actors.selectExpr("*", f"explode({keys}) AS bk")
-        keys = ["bk"]
-        if salt_buckets > 1:
-            left = left.withColumn("salt", F.pmod(F.hash("record_uri"), F.lit(salt_buckets)))
-            right = right.withColumn(
-                "salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-            )
-            keys = ["bk", "salt"]
+        left, right, keys = blocked_sides(feats, actors, salt_buckets)
         lc = left.groupBy(*keys).agg(F.count(F.lit(1)).alias("nl"))
         rc = right.groupBy(*keys).agg(F.count(F.lit(1)).alias("nr"))
         row = (

@@ -270,29 +270,16 @@ def oversized_block_keys(
     )
 
 
-def candidate_pairs(
+def blocked_sides(
     features: DataFrame,
     actors: DataFrame,
     salt_buckets: int = 1,
     block_cap: int | None = None,
-) -> DataFrame:
-    """Blocked candidate join: every (record, actor) pair sharing at least
-    one block key, once per pair, with the record's feature columns, the
-    actor side renamed ``a_*`` (:func:`score_pairs`' column contract) and
-    one shared ``bk``.
-
-    ``block_cap`` (off by default — semantics identical to the uncapped
-    join) drops block keys whose candidate-pair count would exceed the
-    cap BEFORE the pair join. This is the explicit guard for the failure
-    mode measured in BENCH/LINK_PR.md: a low-cardinality name vocabulary
-    makes pair counts quadratic in corpus size (13.2M pairs at 20k synth
-    records), and at 10^12 rows one hot surname×year block can dominate a
-    stage. The reference has the same guard implicitly — its Lucene
-    retrieval returns top-N hits per query, silently truncating hot blocks
-    (src/linker.py Lucene-based candidate search); here the truncation is
-    explicit, deterministic, and observable via :func:`oversized_block_keys`
-    (log it, alert on it, or route dropped blocks to a finer key). A record
-    participating in several keys still pairs through its surviving keys."""
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """The two sides of the blocked candidate join and its keys: the
+    records' feature rows and the actors (renamed ``a_*``), each exploded to
+    one row per block key ``bk``. ``block_cap`` and ``salt_buckets``: see
+    :func:`candidate_pairs`."""
     left = features.selectExpr(
         "*", f"explode({_block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
     )
@@ -321,11 +308,35 @@ def candidate_pairs(
         # hash-derived bucket, dictionary side replicates into every bucket
         left = left.selectExpr("*", f"pmod(hash(record_uri), {salt_buckets}) AS salt")
         right = right.selectExpr("*", f"explode(sequence(0, {salt_buckets - 1})) AS salt")
-        join_keys = ["bk", "salt"]
-    else:
-        join_keys = ["bk"]
+        return left, right, ["bk", "salt"]
+    return left, right, ["bk"]
 
-    return left.join(right, join_keys).dropDuplicates(["record_uri", "actor_uri"])
+
+def candidate_pairs(
+    features: DataFrame,
+    actors: DataFrame,
+    salt_buckets: int = 1,
+    block_cap: int | None = None,
+) -> DataFrame:
+    """Blocked candidate join: every (record, actor) pair sharing at least
+    one block key, once per pair, with the record's feature columns, the
+    actor side renamed ``a_*`` (:func:`score_pairs`' column contract) and
+    one shared ``bk``.
+
+    ``block_cap`` (off by default — semantics identical to the uncapped
+    join) drops block keys whose candidate-pair count would exceed the
+    cap BEFORE the pair join. This is the explicit guard for the failure
+    mode measured in BENCH/LINK_PR.md: a low-cardinality name vocabulary
+    makes pair counts quadratic in corpus size (13.2M pairs at 20k synth
+    records), and at 10^12 rows one hot surname×year block can dominate a
+    stage. The reference has the same guard implicitly — its Lucene
+    retrieval returns top-N hits per query, silently truncating hot blocks
+    (src/linker.py Lucene-based candidate search); here the truncation is
+    explicit, deterministic, and observable via :func:`oversized_block_keys`
+    (log it, alert on it, or route dropped blocks to a finer key). A record
+    participating in several keys still pairs through its surviving keys."""
+    left, right, keys = blocked_sides(features, actors, salt_buckets, block_cap)
+    return left.join(right, keys).dropDuplicates(["record_uri", "actor_uri"])
 
 
 def link_persons(

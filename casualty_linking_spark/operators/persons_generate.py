@@ -8,8 +8,11 @@ graphs are ONE projection: every triple entry carries its ``graph_kind`` and
 its graph's guard, and a single ``inline`` over the concatenated entry
 arrays emits them in one scan over the silver record joined with the
 (broadcast) link tables — no cache, no per-graph pass, no driver loop. The
-graph union's (subj, pred, obj) dedup (``triples.union_graphs``) gives the
-output its set semantics.
+output is a set with no dedup: one base row per unlinked record (the
+municipality dimension is keyed by ``mun_uri``, a record has at most one
+rank link, its occupation and unit links are collected as sets), subjects
+minted per record and graph, and fi / en labels that differ by template
+(tests/test_triples_are_sets.py).
 
 Event semantics pinned by the reference:
 
@@ -130,8 +133,8 @@ def generate_persons(
 ) -> dict[str, DataFrame]:
     """-> {"generated": triples} — the persons, promotions, joinings, births,
     deaths, disappearances, woundings and documents_links graphs as one
-    DataFrame, told apart by ``graph_kind``. Rows are not deduplicated: the
-    consumer's union applies set semantics."""
+    DataFrame, told apart by ``graph_kind``. The rows are a set by
+    construction (see the module docstring), so nothing deduplicates them."""
     # J10: skip casualties already linked to a person
     linked = person_links.selectExpr("subj AS record_uri")
     base = records.join(linked, "record_uri", "left_anti").selectExpr(

@@ -2,7 +2,9 @@
 
 The rdflib Graph IR of the reference becomes the triples DataFrame
 (seven columns, see schema.py). Graph union-with-dedup (src/linker.py:208,
-src/person_generator.py:221-228) is ``union_graphs``; pattern removal
+src/person_generator.py:221-228) is ``union_graphs``; the union of graphs
+that are sets by construction, with only curated additions deduplicated, is
+``append_graphs``; pattern removal
 (src/linker.py:95-96, src/process.py:100,105) is ``remove_pattern``;
 the direct URI-object rewrites of src/process.py:22-43 are
 ``fix_by_direct_uri_mappings``. Row→triples unpivot (map_row_to_rdf,
@@ -132,10 +134,32 @@ def records_to_triples(records: DataFrame, cemeteries_dim: DataFrame, graph_kind
 def union_graphs(*graphs: DataFrame) -> DataFrame:
     """Graph union with RDF set semantics (U1): unionByName + dedup on
     (subj, pred, obj)."""
+    return append_graphs(*graphs).dropDuplicates(TRIPLE_COLS)
+
+
+def append_graphs(*graphs: DataFrame, additions: DataFrame | None = None) -> DataFrame:
+    """Graph union of sets that share no triple (U1 without the shuffle):
+    unionByName only, so each graph's rows are written as they are
+    partitioned. The caller vouches that every graph is a set and that no
+    two overlap (``Pipeline.run``'s graphs are, by their keys).
+
+    ``additions`` (curated triples, which may repeat one another or a
+    computed triple) is the one input deduplicated: ``dropDuplicates`` over
+    the additions alone, then every addition already in the graphs is
+    dropped. The graphs stream once through a broadcast left-semi join on
+    the additions' (subj, pred, obj), and the additions left-anti those
+    hits, so both joins are the size of the additions and the graphs never
+    shuffle. An addition repeating a computed triple loses to the computed
+    row (its ``graph_kind`` and annotations win)."""
     out = graphs[0]
     for g in graphs[1:]:
         out = out.unionByName(g, allowMissingColumns=True)
-    return out.dropDuplicates(TRIPLE_COLS)
+    if additions is None:
+        return out
+    add = additions.dropDuplicates(TRIPLE_COLS)
+    hits = out.join(F.broadcast(add.select(TRIPLE_COLS)), TRIPLE_COLS, "left_semi")
+    new = add.join(F.broadcast(hits.select(TRIPLE_COLS)), TRIPLE_COLS, "left_anti")
+    return out.unionByName(new, allowMissingColumns=True)
 
 
 def remove_pattern(graph: DataFrame, pred: str | None = None, obj: str | None = None) -> DataFrame:
@@ -209,8 +233,8 @@ def upsert_triples(
     """Incremental graph maintenance: merge a correction/enrichment batch
     into an existing graph without a read-modify-write of the whole store.
 
-    Non-functional predicates accumulate with RDF set semantics (the same
-    ``union_graphs`` dedup every merge in this module uses). Predicates in
+    Non-functional predicates accumulate with RDF set semantics (the
+    ``union_graphs`` dedup: base and delta may overlap). Predicates in
     ``functional_preds`` are single-valued: a delta assertion for
     (subj, pred) REPLACES every base triple with that (subj, pred) — the
     latest batch wins, which is how the reference's curated-additions edit
@@ -290,7 +314,7 @@ def graph_diff(new: DataFrame, old: DataFrame) -> DataFrame:
     """Triple-level diff between two graph versions: rows of ``new`` absent
     from ``old`` tagged op='added', rows of ``old`` absent from ``new``
     tagged op='removed'. Identity is the (subj, pred, obj) set — the same
-    set semantics every union in this module enforces — so annotation-only
+    set semantics every union in this module keeps — so annotation-only
     rows never spuriously diff. The audit counterpart of the curated-
     additions merge (reference process.sh:17): what did this batch's edit
     actually change? Both sides are anti-joins on the triple key — fully

@@ -34,7 +34,9 @@ from ..operators.link_persons import connected_components  # noqa: F401
 from ..operators.link_ranks import link_ranks
 from ..operators.link_units import link_units
 from ..operators.persons_generate import generate_persons
-from ..operators.triples import records_to_triples, union_graphs
+from ..operators.triples import append_graphs, records_to_triples
+# not called here; kept because kgbench's --trace 1 tracer wraps it by this name
+from ..operators.triples import union_graphs  # noqa: F401
 from . import storage
 
 CODE_VERSION = "r4"
@@ -191,6 +193,15 @@ class Pipeline:
                 ),
             )
 
+        # t5 is the plain union of these graphs, with no shuffle: each is a
+        # set and no two share a triple (tests/test_triples_are_sets.py
+        # checks both and these keys). One t2_records row per record_uri
+        # (each person's conv_id is spelled one way) and one entry per
+        # predicate; at most one rank, occupation, unit, period and person
+        # link per record; one generated row per unlinked record, its
+        # subjects minted per record and graph.
+        # Across graphs the predicates differ or the subjects do (the
+        # generated documents_links skip the person-linked records).
         cas = records_to_triples(t2, self.dims["cemeteries"])
         graphs = [cas, rank_links, occ_links, unit_links, periods]
         if person_links is not None:
@@ -202,19 +213,20 @@ class Pipeline:
             graphs.extend(gen.values())
 
         extra_inputs: list[str] = []
+        add = None
         if self.additions is not None:
-            # curated additions merge (reference process.sh:17) — set
-            # semantics via union_graphs' dedup; the additions' own identity
-            # joins the fingerprint so editing the curated file re-runs t5.
-            # content=True: the typical source is a hand-maintained Turtle
-            # file edited IN PLACE, so the file list alone is not an identity
+            # curated additions merge (reference process.sh:17): the one
+            # input that is not a set by construction, so append_graphs
+            # deduplicates it, alone and against the graphs; the additions'
+            # own identity joins the fingerprint so editing the curated file
+            # re-runs t5. content=True: the typical source is a
+            # hand-maintained Turtle file edited IN PLACE, so the file list
+            # alone is not an identity
             add = self.additions
             if "graph_kind" not in add.columns:
                 add = add.withColumn("graph_kind", F.lit("casualties"))
-            graphs.append(
-                add.select(
-                    "subj", "pred", "obj", "obj_type", "lang", "datatype", "graph_kind"
-                )
+            add = add.select(
+                "subj", "pred", "obj", "obj_type", "lang", "datatype", "graph_kind"
             )
             extra_inputs.append(
                 "additions:" + self._input_identity(self.additions, content=True)
@@ -226,7 +238,7 @@ class Pipeline:
              "t3_related_periods"]
             + (["t4_person_links"] if person_links is not None else [])
             + extra_inputs,
-            lambda: union_graphs(*graphs),
+            lambda: append_graphs(*graphs, additions=add),
             partition_by=["graph_kind"],
             metrics_keys=["graph_kind", "pred"],
         )

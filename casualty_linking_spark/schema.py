@@ -3,9 +3,10 @@
 The triples DataFrame is the engine's graph IR: an rdflib Graph (a set of
 (s, p, o) triples — reference src/linker.py:208 relies on set-union
 semantics) becomes a DataFrame of seven columns (subj, pred, obj,
-obj_type, lang, datatype, graph_kind). ``operators.triples.union_graphs``
-enforces set semantics with ``dropDuplicates(TRIPLE_COLS)`` when the
-graphs are merged.
+obj_type, lang, datatype, graph_kind). t5 is a set because each graph
+``Pipeline.run`` appends is one and no two overlap
+(``operators.triples.append_graphs``); ``operators.triples.union_graphs``
+applies ``dropDuplicates(TRIPLE_COLS)`` where graphs may overlap.
 """
 
 from pyspark.sql import types as T

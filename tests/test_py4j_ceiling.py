@@ -44,6 +44,7 @@ from casualty_linking_spark.plans import pipeline, storage
 #   records_to_triples             4795 / 106          31 / 31
 #   generate_persons              12230 / 12230       296 / 296
 #   union_graphs                     21 / 21           21 / 21
+#   append_graphs (builds t5)                                   6 / 6
 #
 # Every ceiling is at most the old memoized (second-build) count, except
 # broadcast_dims: the per-session dimension memo is gone, and rebuilding the
@@ -54,7 +55,9 @@ from casualty_linking_spark.plans import pipeline, storage
 # link_persons to 273 / 257. Resolving ranks on the dimension (no vocabulary
 # pass) took link_ranks to 35 / 35; one argmax window and no dedup in path A,
 # with link_units built once per run for both unit tables, took link_units
-# to 170 / 170 (building it for each unit table would double that).
+# to 170 / 170 (building it for each unit table would double that). t5 is
+# the plain union of graphs that are sets by construction (append_graphs,
+# 6 / 6), not union_graphs' union and dedup (14 / 14).
 CEILINGS = {
     "broadcast_dims": 100,
     "extract_mentions": 43,
@@ -68,7 +71,7 @@ CEILINGS = {
     "link_persons": 273,
     "records_to_triples": 60,
     "generate_persons": 200,
-    "union_graphs": 14,
+    "append_graphs": 6,
 }
 
 
@@ -110,7 +113,7 @@ def _count_calls(spark, monkeypatch):
         (dims, ["broadcast_dims"]),
         (pipeline, [
             "link_ranks", "link_occupations", "link_units", "casualty_features",
-            "link_persons", "records_to_triples", "generate_persons", "union_graphs",
+            "link_persons", "records_to_triples", "generate_persons", "append_graphs",
         ]),
     ]:
         for name in names:
@@ -170,11 +173,11 @@ def test_pipeline_py4j_ceilings_and_no_python_rdd_scans(spark, tmp_path, monkeyp
 # sidecar run, first and second Pipeline.run alike (40 records, local[8]).
 # Measured as the person tail lost its redundant jobs:
 #
-#   stage           per-graph dedups,    one-pass generation,   components
-#                   2-checkpoint CC,     one cut per            projected from
-#                   footer inference     CC round               the matching
-#   t4_components          22                   17                    1
-#   t5_triples             30                   14                   14
+#   stage           per-graph dedups,    one-pass generation,   components       no dedup
+#                   2-checkpoint CC,     one cut per            projected from   over the
+#                   footer inference     CC round               the matching     graphs
+#   t4_components          22                   17                    1               1
+#   t5_triples             30                   14                   14              13
 #
 # The person links were two stages, t4_features (6 jobs) and t4_person_links
 # (13, counting the jobs its localCheckpoint cuts ran at the call); as one
@@ -190,7 +193,7 @@ JOB_CEILINGS = {
     "t3_related_periods": 4,
     "t4_person_links": 14,
     "t4_components": 1,
-    "t5_triples": 14,
+    "t5_triples": 13,
 }
 # a run with actors writes these and nothing else (besides metrics/)
 STAGE_TABLES = [

@@ -111,16 +111,30 @@ def test_real_municipalities_roundtrip_counts(spark, tmp_path):
     back.unpersist()
 
 
-def test_pipeline_additions_merge(spark, tmp_path):
+def test_pipeline_additions_merge(spark, tmp_path, monkeypatch):
     """Pipeline(additions=...) unions curated triples into t5 with set
     semantics (graph_kind defaulted to 'casualties'), and the additions'
     identity is part of t5's fingerprint: same additions -> resume (no
-    rewrite), changed additions -> t5 rebuilds."""
+    rewrite), changed additions -> t5 rebuilds. Additions that repeat one
+    another, a casualty triple, a rank link or a generated triple leave t5
+    a set, equal to union_graphs over the same inputs, and a repeated
+    computed triple keeps its computed row."""
     from casualty_linking_spark import synth
-    from casualty_linking_spark.plans import storage
+    from casualty_linking_spark.operators.triples import union_graphs
+    from casualty_linking_spark.plans import pipeline, storage
     from casualty_linking_spark.plans.pipeline import Pipeline
 
+    handed = []
+    append = pipeline.append_graphs
+
+    def capture(*graphs, additions=None):
+        handed[:] = [*graphs, additions]
+        return append(*graphs, additions=additions)
+
+    monkeypatch.setattr(pipeline, "append_graphs", capture)
+
     transcripts = synth.transcripts_range(spark, 40)
+    actors = synth.actors_range(spark, 40)
     add_rows = [
         ("http://x/p1", "http://ldf.fi/schema/warsa/casualties/buried_in",
          "http://x/cem1", "uri", None, None),
@@ -131,25 +145,43 @@ def test_pipeline_additions_merge(spark, tmp_path):
     additions = spark.createDataFrame(add_rows, schema)
 
     root = str(tmp_path / "pipe")
-    t5 = Pipeline(spark, root, transcripts, additions=additions).run()
+    t5 = Pipeline(spark, root, transcripts, actors=actors, additions=additions).run()
     merged = t5.filter(F.col("subj") == "http://x/p1")
     assert merged.count() == 2
     assert {r.graph_kind for r in merged.collect()} == {"casualties"}
 
     man1 = storage.read_manifest(f"{root}/t5_triples")
     # resume: identical additions -> identical fingerprint, stage read back
-    Pipeline(spark, root, transcripts, additions=additions).run()
+    Pipeline(spark, root, transcripts, actors=actors, additions=additions).run()
     assert storage.read_manifest(f"{root}/t5_triples")["fingerprint"] == man1["fingerprint"]
 
+    # computed triples the next additions repeat, as 'casualties' additions
+    cols = ["subj", "pred", "obj", "obj_type", "lang", "datatype"]
+    repeats = {
+        kind: t5.where(f"graph_kind = '{kind}'").orderBy(*cols).select(*cols).first()
+        for kind in ["casualties", "rank_links", "births"]
+    }
     # changed additions -> new fingerprint, t5 rebuilt with the new triple
     additions2 = spark.createDataFrame(
         add_rows + [("http://x/p2", "http://ldf.fi/schema/warsa/casualties/buried_in",
-                     "http://x/cem2", "uri", None, None)],
+                     "http://x/cem2", "uri", None, None)]
+        + [tuple(r) for r in repeats.values()] + add_rows[:1],
         schema,
     )
-    t5b = Pipeline(spark, root, transcripts, additions=additions2).run()
+    t5b = Pipeline(spark, root, transcripts, actors=actors, additions=additions2).run()
     assert storage.read_manifest(f"{root}/t5_triples")["fingerprint"] != man1["fingerprint"]
     assert t5b.filter(F.col("subj") == "http://x/p2").count() == 1
+    assert t5b.filter(F.col("subj") == "http://x/p1").count() == 2
+
+    keys = [tuple(r) for r in t5b.select("subj", "pred", "obj").collect()]
+    assert len(keys) == len(set(keys))
+    want = [tuple(r) for r in union_graphs(*handed).select("subj", "pred", "obj").collect()]
+    assert sorted(keys) == sorted(want)
+    for kind, r in repeats.items():
+        rows = t5b.where(
+            (F.col("subj") == r.subj) & (F.col("pred") == r.pred) & (F.col("obj") == r.obj)
+        ).collect()
+        assert [x.graph_kind for x in rows] == [kind], (kind, rows)
 
 
 def test_pipeline_resume_rebuilds_what_a_new_input_reaches(spark, tmp_path, monkeypatch):

@@ -35,7 +35,7 @@ def test_salted_linkage_matches_unsalted(spark):
     # keys oversized_block_keys reports, and records with several surviving
     # keys still link
     from casualty_linking_spark.operators.link_persons import (
-        _block_keys,
+        blocked_sides,
         oversized_block_keys,
     )
 
@@ -45,15 +45,7 @@ def test_salted_linkage_matches_unsalted(spark):
     }
     assert capped_hi == plain
 
-    left = feats.selectExpr(
-        "*", f"explode({_block_keys('family', 'death_iso', 'birth_iso', 'given')}) AS bk"
-    )
-    right = actors.selectExpr(
-        "*",
-        "explode({}) AS bk".format(
-            _block_keys("family", "death_iso", "birth_iso", "given", name_only_always=True)
-        ),
-    )
+    left, right, _ = blocked_sides(feats, actors)
     over = oversized_block_keys(left, right, 50).collect()
     assert over, "the 20-surname synth must produce oversized blocks at cap=50"
     assert all(r.n_pairs > 50 and r.n_pairs == r.n_left * r.n_right for r in over)
